@@ -1,36 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache is a STATIC conf defaulting to 100
-      // entries; a 188-query registry emits thousands of codegen units
-      // per pass, so at the default every query re-runs janino on every
-      // pass — pure driver-side compile cost with no scale dependence
-      // (the cache holds class references, not data). Sized to hold the
-      // whole registry's units once.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Local-path checkpointing: the default FileContext-based manager
-      // routes every offset/commit/state-delta rename through Hadoop's
-      // getFileLinkStatus, which (absent libhadoop) FORKS a readlink/stat
-      // process per checkpoint file — profiled at ~450 ms of addBatch
-      // time per micro-batch even for 0-row batches. The FileSystem-based
-      // manager is Spark's documented alternative with the same
-      // rename-based atomicity for a single writer; on HDFS/object-store
-      // checkpoints keep the default (its rename-fails-if-exists guards
-      // concurrent drivers). Streaming-gate subset: 24.2 s -> 14.9 s.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      // same fork class on the write path: absent libhadoop, every local
-      // file create / mkdir forks a chmod — see NioLocalFileSystem
-      .config("spark.hadoop.fs.file.impl", "graft.sources.NioLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // JVM/codegen + file-listing warmup against the BENCHED sfDir,
     // outside the timed region; then a stable order so per-query numbers
     // are comparable across rounds. A failed query is recorded as -1.0,

@@ -16,7 +16,6 @@ object SparkEntry {
       analytics.Views.all ++
       analytics.Calendar.all ++
       etl.Taxonomy.all ++
-      etl.VersionLog.all ++
       etl.SnapshotMerge.all ++
       etl.Skew.all ++
       sources.PartitionedLayout.all ++

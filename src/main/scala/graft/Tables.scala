@@ -29,7 +29,7 @@ object Tables {
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** Session settings every entry point applies before reading. Also
-    * registers the engine's native functions for sessions created without
+    * registers the engine's extensions for sessions created without
     * `spark.sql.extensions=graft.plans.GraftExtensions`. Idempotent and
     * memoized — `table` calls this on a hot path. */
   def configure(spark: SparkSession): SparkSession = {
@@ -38,16 +38,7 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-      graft.plans.CosineSimilarity.register(spark)
-      // runtime twin of GraftExtensions' injectOptimizerRule (same
-      // dual-path registration as the native functions); conf-gated, so
-      // sessions that never set the flag keep byte-identical plans
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.AutoBloomPrune))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.AutoBloomPrune
-      if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+      graft.plans.GraftExtensions.register(spark)
     }
     spark
   }

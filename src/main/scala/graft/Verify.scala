@@ -1,35 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: far too small for a 188-query registry
-      // — see the Bench.scala comment (identical rationale here)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // local-path checkpoint renames fork a process under the default
-      // FileContext manager — see the Bench.scala comment
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      // chmod-fork-free local file creates — see NioLocalFileSystem
-      .config("spark.hadoop.fs.file.impl", "graft.sources.NioLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     def deleteOut(name: String): Unit = {
-      val d = java.nio.file.Paths.get(outDir, name)
-      if (java.nio.file.Files.exists(d)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
+      val d = Paths.get(outDir, name)
+      if (Files.exists(d)) {
+        // a walk holds an open directory stream until closed
+        val walk = Files.walk(d)
+        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(f => Files.deleteIfExists(f))
+        finally walk.close()
       }
     }
     // Dev-only subset filter (comma-separated name prefixes): lets a

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** One-aggregation multiset diff of two same-schema frames — the shared
   * engine behind every CDF surface ([[SnapshotMerge.changes]],
-  * [[SnapshotMerge.changesKeyed]], the streaming-source batches,
-  * [[VersionLog.changes]]).
+  * [[SnapshotMerge.changesKeyed]], the streaming-source batches).
   *
   * Contract: [[tagged]]`(after, before)` is multiset-identical to
   *

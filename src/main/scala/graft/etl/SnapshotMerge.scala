@@ -23,9 +23,9 @@ import graft.sources.CommitMarker
   *   store/_GRAFT_EPOCH_7                         // CommitMarker claim files
   * }}}
   *
-  * Why this shape and not [[VersionLog]]'s: VersionLog re-writes the FULL
-  * table per commit (fine for small marts, fatal at 100 TB); this store
-  * re-writes only the partitions a merge touches (like
+  * Why this shape and not a full-copy snapshot per commit (fine for
+  * small marts, fatal at 100 TB): this store re-writes only the
+  * partitions a merge touches (like
   * `Merge.upsertIntoParquet`) but publishes them as NEW `__e={epoch}`
   * subdirectories plus one atomically-renamed manifest, never deleting a
   * file any committed snapshot references. Readers therefore get:
@@ -38,7 +38,7 @@ import graft.sources.CommitMarker
   *    store accepts and documents).
   *  - '''Time travel''': `read(asOf = Some(e))` for any epoch still
   *    inside the vacuum retention, on the partitioned store rather than
-  *    VersionLog's full-copy snapshots.
+  *    on full-copy snapshots.
   *  - '''Detect-and-fail concurrency''': THE MANIFEST IS THE COMMIT —
   *    logical epoch `base + 1` lands by an atomic no-overwrite rename
   *    (put-if-absent, Delta's log-commit shape), so a merge computed
@@ -735,8 +735,7 @@ object SnapshotMerge {
 
   /** RESTORE the store to a prior epoch (Delta RESTORE parity — the
     * reference restores managed tables to a version,
-    * delta_setup.py:581-596; [[VersionLog.restore]] gives the verb on
-    * the full-copy swap store): commits a NEW manifest whose
+    * delta_setup.py:581-596): commits a NEW manifest whose
     * (partition → version) map, schema, and stats are `epoch`'s —
     * METADATA-ONLY, no data file is moved or rewritten (the old version
     * dirs are still on disk inside the vacuum retention; the new
@@ -871,8 +870,7 @@ object SnapshotMerge {
 
   /** DESCRIBE HISTORY analog (Delta parity — the reference inspects
     * table history for its rollback/audit runbooks,
-    * delta_setup.py:581-596 neighborhood; [[VersionLog.history]] gives
-    * the verb on the full-copy store): one row per RETAINED epoch, from
+    * delta_setup.py:581-596 neighborhood): one row per RETAINED epoch, from
     * manifest metadata alone — epoch, operation kind, live partition
     * count, and the file/byte/row totals the `partv2`/`partv3` stat
     * lines carry (`rows` is null when any entry predates `partv3`, and
@@ -992,8 +990,7 @@ object SnapshotMerge {
   }
 
   /** Change feed between two committed epochs (Delta CDF analog on the
-    * PARTITIONED store — [[VersionLog.changes]] gives the same contract
-    * on full-copy snapshots): full-row diff via `exceptAll` — rows only
+    * PARTITIONED store): full-row diff via `exceptAll` — rows only
     * in `toE` are inserts, rows only in `fromE` deletes, an update one
     * of each. Columns are aligned by name against `toE`'s manifest
     * schema (schema evolution adds columns; older snapshots read them
@@ -1723,6 +1720,67 @@ object SnapshotMerge {
   }
 
   // ------------------------------------------------------------------
+  // q47 — the change feed between two commits that insert, delete and
+  // update rows, under the driver's oracle. Both snapshots are pure
+  // functions of the events fixture:
+  //  - epoch 1 = event_id % 10 < 8                     (the baseline)
+  //  - epoch 2 = event_id % 10 < 9, minus 'error' rows, (inserts + deletes)
+  //    with click values bumped by 10                  (updates → del+ins)
+  // The store is partitioned by event_type. Epoch 1 is a keyed bootstrap
+  // upsert; epoch 2 is ONE applyChanges (upsert the second snapshot,
+  // delete the baseline's error keys).
+  // The answer is changes(1, 2) rolled up per (change type, event
+  // type); the oracle is plain EXCEPT ALL / UNION ALL SQL over the two
+  // snapshots, exact because event_id is unique and non-null, so the
+  // keyed commits land exactly the second snapshot.
+  // ------------------------------------------------------------------
+
+  private def q47Store(spark: SparkSession, sfDir: String): String =
+    graft.GateFixture.cached("graft_snapmerge_q47", sfDir) { root =>
+      val store = root.toString + "/store"
+      val ev = graft.Tables.events(spark, sfDir).select("event_id", "event_type", "value")
+      val v0 = ev.filter(col("event_id") % 10 < 8)
+      val v1 = ev.filter(col("event_id") % 10 < 9)
+        .filter(col("event_type").isNull || col("event_type") =!= "error")
+        .withColumn("value",
+          when(col("event_type") === "click", col("value") + lit(10.0)).otherwise(col("value")))
+      upsert(spark, store, v0, Seq("event_id"), "event_type")
+      applyChanges(spark, store, v1, v0.filter(col("event_type") === "error"),
+        Seq("event_id"), "event_type")
+      store
+    }
+
+  /** q47 — the change feed between the q47 store's two epochs, rolled
+    * up per (change type, event type). */
+  def versionChangesRollup(spark: SparkSession, sfDir: String): DataFrame = {
+    import graft.functions.Det.dsum
+    val store = q47Store(spark, sfDir)
+    val epochs = committedEpochs(spark, store)
+    changes(spark, store, epochs.head, epochs.last)
+      .groupBy("_change_type", "event_type")
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
+      // nulls-last matches the oracle engine's ORDER BY default (Spark
+      // defaults nulls-first) — event_type is nullable by contract
+      .orderBy(col("_change_type"), col("event_type").asc_nulls_last)
+  }
+
+  private val q47Sql = {
+    val dsum = graft.functions.Det.sqlDsum _
+    s"""WITH ev AS (SELECT event_id, event_type, value FROM events),
+       |a AS (SELECT event_id, event_type, value FROM ev WHERE event_id % 10 < 8),
+       |b AS (SELECT event_id, event_type,
+       |        CASE WHEN event_type = 'click' THEN value + cast(10.0 as double) ELSE value END AS value
+       |      FROM ev WHERE event_id % 10 < 9 AND (event_type <> 'error' OR event_type IS NULL)),
+       |ins AS (SELECT * FROM b EXCEPT ALL SELECT * FROM a),
+       |del AS (SELECT * FROM a EXCEPT ALL SELECT * FROM b),
+       |feed AS (
+       |  SELECT 'insert' AS _change_type, event_type, value FROM ins
+       |  UNION ALL SELECT 'delete' AS _change_type, event_type, value FROM del)
+       |SELECT _change_type, event_type, count(*) AS n, ${dsum("value")} AS total_value
+       |FROM feed GROUP BY 1,2 ORDER BY 1,2""".stripMargin
+  }
+
+  // ------------------------------------------------------------------
   // q110 — the snapshot store end-to-end under the driver's oracle:
   // bootstrap + two MERGE epochs (updates, inserts, and a moved
   // partition key in each), then aggregate the FINAL snapshot through
@@ -1806,8 +1864,8 @@ object SnapshotMerge {
     * (updates surface as delete+insert, the epoch-2 moved-day keys diff
     * in both partitions), rolled up per change type and day. The oracle
     * recomputes the same full-row diff with EXCEPT ALL in DuckDB —
-    * q47 proves the contract on [[VersionLog]]'s full-copy snapshots;
-    * this row proves it on the partition-incremental manifest store. */
+    * q47 proves the contract on a keyed delete-and-update commit; this
+    * row proves it across partition moves. */
   def snapshotChangesRollup(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Det.dsum
     val store = q110Store(spark, sfDir)
@@ -2036,6 +2094,7 @@ object SnapshotMerge {
        |FROM s2""".stripMargin
 
   def all: Seq[graft.Q] = Seq(
+    graft.Q("q47_version_changes", (s, d) => versionChangesRollup(s, d), Some(q47Sql)),
     graft.Q("q110_snapshot_merge", (s, d) => snapshotMergeRollup(s, d), Some(q110Sql)),
     graft.Q("q111_snapshot_changes", (s, d) => snapshotChangesRollup(s, d), Some(q111Sql)),
     graft.Q("q113_snapshot_changes_keyed",

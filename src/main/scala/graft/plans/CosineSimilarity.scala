@@ -1,13 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression: cosine similarity over two `array<float>`
   * columns in a single fused pass (dot + both norms), with whole-stage
@@ -81,73 +79,4 @@ object CosineSimilarity {
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[CosineSimilarity].getName, "cosine_sim")
   val builder: Seq[Expression] => Expression = args => CosineSimilarity(args(0), args(1))
-
-  /** Runtime registration of all native functions (for sessions created
-    * without the extensions config, e.g. the driver's). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .registerFunction(identifier, info, builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(RollingMinHash.identifier, RollingMinHash.info, RollingMinHash.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(SimHash64.identifier, SimHash64.info, SimHash64.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(Md5SimHashBands.identifier, Md5SimHashBands.info, Md5SimHashBands.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(MinHash16.identifier, MinHash16.info, MinHash16.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(MinHashMd5.identifier, MinHashMd5.info, MinHashMd5.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(RollingArgminWindow.identifier, RollingArgminWindow.info,
-        RollingArgminWindow.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(Md5WindowMin.identifier, Md5WindowMin.info, Md5WindowMin.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(MisraGries.identifier, MisraGries.info, MisraGries.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(TopKRows.identifier, TopKRows.info, TopKRows.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(CharNgrams.identifier, CharNgrams.info, CharNgrams.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(Dsum6.identifier, Dsum6.info, Dsum6.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(GramStats.identifier, GramStats.info, GramStats.builder)
-  }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` — the idiomatic
-  * production injection path for the engine's native functions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((CosineSimilarity.identifier, CosineSimilarity.info,
-      CosineSimilarity.builder))
-    ext.injectFunction((RollingMinHash.identifier, RollingMinHash.info,
-      RollingMinHash.builder))
-    ext.injectFunction((SimHash64.identifier, SimHash64.info,
-      SimHash64.builder))
-    ext.injectFunction((Md5SimHashBands.identifier, Md5SimHashBands.info,
-      Md5SimHashBands.builder))
-    ext.injectFunction((MinHash16.identifier, MinHash16.info,
-      MinHash16.builder))
-    ext.injectFunction((MinHashMd5.identifier, MinHashMd5.info,
-      MinHashMd5.builder))
-    ext.injectFunction((RollingArgminWindow.identifier, RollingArgminWindow.info,
-      RollingArgminWindow.builder))
-    ext.injectFunction((Md5WindowMin.identifier, Md5WindowMin.info,
-      Md5WindowMin.builder))
-    ext.injectFunction((MisraGries.identifier, MisraGries.info,
-      MisraGries.builder))
-    ext.injectFunction((TopKRows.identifier, TopKRows.info,
-      TopKRows.builder))
-    ext.injectFunction((CharNgrams.identifier, CharNgrams.info,
-      CharNgrams.builder))
-    ext.injectFunction((Dsum6.identifier, Dsum6.info, Dsum6.builder))
-    ext.injectFunction((GramStats.identifier, GramStats.info, GramStats.builder))
-    // conf-gated (spark.graft.autoBloomPrune); a no-op for every session
-    // that does not opt in, so global injection is plan-preserving
-    ext.injectOptimizerRule(_ => AutoBloomPrune)
-    // fires only on AsOfJoinNode (which only asofJoinNative constructs),
-    // so global injection never touches another query's plan
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-  }
 }

@@ -25,7 +25,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * effective mode bits, is unchanged.
   *
   * Opt-in via `spark.hadoop.fs.file.impl=graft.sources.NioLocalFileSystem`
-  * (the harness mains set it); deployments whose local FS interaction is
+  * ([[graft.Harness.session]] sets it); deployments whose local FS interaction is
   * incidental can keep the Hadoop default. Sticky/setuid bits — which
   * PosixFilePermission cannot express — fall back to the Hadoop path;
   * no Spark-created file uses them. */

@@ -20,8 +20,8 @@ import graft.functions.Det.{dsum, sqlDsum}
   */
 object PartitionedLayout {
 
-  // One scratch layout per (JVM, sfDir), deleted on JVM exit — the q47
-  // memoization pattern (VersionLog.scala): the layouts are pure
+  // One scratch layout per (JVM, sfDir), deleted on JVM exit (the
+  // GateFixture memoization pattern): the layouts are pure
   // functions of the read-only fixture, so verify + bench in one session
   // write them once and every call after that only reads.
   private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()

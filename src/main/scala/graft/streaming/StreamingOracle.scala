@@ -1266,7 +1266,7 @@ object StreamingOracle {
         // duplicate band rows would shift the bucket-cap ranks.
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
-          graft.plans.CosineSimilarity.register(sp)
+          graft.plans.GraftExtensions.register(sp)
           val priorSigs = seedSigs +: (0L until batchId).map(k => s"$sigOverlay/b$k")
           val priorBands = seedBands +: (0L until batchId).map(k => s"$bandOverlay/b$k")
           val batchSigs = graft.llm.TextDedup.withPortableSignatures(batch).persist()

@@ -23,13 +23,10 @@ object Streams {
 
   /** S2 — rate-limited streaming file source
     * (reference: real_time_streaming.py:226-230). When no explicit rate
-    * is given, the active Conf profile's trigger rate applies (falling
-    * back to 50). */
+    * is given, 50 files per trigger. */
   def fileStreamSource(spark: SparkSession, dir: String, schema: StructType,
                        maxFilesPerTrigger: Int = -1): DataFrame = {
-    val rate =
-      if (maxFilesPerTrigger > 0) maxFilesPerTrigger
-      else spark.conf.getOption(graft.Conf.MaxFilesPerTriggerKey).map(_.toInt).getOrElse(50)
+    val rate = if (maxFilesPerTrigger > 0) maxFilesPerTrigger else 50
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", rate)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.operators.AsOfJoin
 
@@ -99,14 +99,7 @@ object ABLadder {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Harness.session(Harness.cpus)
     val pairs = sys.env.get("GRAFT_AB_PAIRS").map(_.toInt).getOrElse(3)
     val only = sys.env.get("GRAFT_AB_ONLY")
     def enabled(n: String) = only.forall(n.contains)

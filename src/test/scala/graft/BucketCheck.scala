@@ -1,15 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: max portable-minhash band-bucket occupancy per scale —
   * whether MaxBucketDefault binds anywhere on the fixtures. */
 object BucketCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Seq("0.001", "0.01", "0.1").foreach { sf =>
       val docs = Tables.documents(spark, s"/root/testdata/sf$sf")

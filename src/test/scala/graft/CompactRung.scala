@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.etl.SnapshotMerge
@@ -46,14 +45,7 @@ object CompactRung {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(8000000L)
     val passes = sys.env.get("GRAFT_COMPACT_PASSES").map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Harness.session(Harness.cpus)
 
     val root = java.nio.file.Files.createTempDirectory("graft_compact_rung")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))

@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for registered queries to files — the
   * plan receipts committed under `plans/r19/` (`<query>_<tag>.txt`).
@@ -20,11 +19,7 @@ object ExplainDump {
     val tag = args(2)
     val names = args.drop(3).toSeq
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Plan-quality receipts for the headline queries: runs each query (so
@@ -37,11 +36,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultQueries
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

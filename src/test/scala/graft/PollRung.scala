@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.etl.SnapshotMerge
@@ -24,11 +23,7 @@ import graft.etl.SnapshotMerge
 object PollRung {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-poll-rung").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     import spark.implicits._
     try {
       println("width,mode,polls,total_ms,ms_per_poll")

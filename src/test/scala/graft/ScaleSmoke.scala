@@ -84,14 +84,7 @@ object ScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Harness.session(Harness.cpus)
 
     val x10 = build10x(spark, base)
     // Default: the ENTIRE registry — every operator's ×10 cost ratio is

@@ -17,33 +17,7 @@ object SparkSuite {
     * layout, not just this machine's /root/testdata. */
   val testData: String = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Tables.configure(s)
-    s
-  }
-}
-
-class ConfSpec extends SparkSuite {
-  test("profiles apply AQE + shuffle sizing and register engine functions") {
-    val s2 = spark.newSession()
-    Conf(s2, Conf.Prod)
-    assert(s2.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
-    assert(s2.conf.get("spark.sql.shuffle.partitions") === "400")
-    assert(s2.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
-    // engine functions registered by configure
-    assert(s2.sql("SELECT cosine_sim(array(cast(1.0 as float)), array(cast(1.0 as float)))")
-      .head().getDouble(0) === 1.0)
-    Conf(s2, Conf.Dev)
-    assert(s2.conf.get("spark.sql.shuffle.partitions") === "32")
-  }
+  /** The harness session Bench and Verify run under, at 4 slots: specs
+    * pin 4 shuffle partitions (EtlSpec, Dsum6Spec). */
+  lazy val session: SparkSession = Harness.session(4)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Streaming-gate receipts for PLAN_AUDIT (r14 verdict #6): the batch
   * auto queries print decision + plan facts in one place; this main
@@ -30,14 +29,8 @@ object StreamAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.configure(spark)
     println("gate,result_rows,triggers,input_rows,state_operators," +
       "state_rows_final,state_rows_updated,late_rows_dropped")
     Gates.foreach { n =>

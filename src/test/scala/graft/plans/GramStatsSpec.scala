@@ -36,7 +36,7 @@ class GramStatsSpec extends SparkSuite {
 
   private def assertIdentical(docs: org.apache.spark.sql.DataFrame,
                               clue: String): Unit = {
-    CosineSimilarity.register(spark)
+    GraftExtensions.register(spark)
     val got = native(docs).orderBy("doc_id").collect()
     val want = composed(docs).orderBy("doc_id").collect()
     assert(got.toSeq === want.toSeq, clue)
@@ -63,7 +63,7 @@ class GramStatsSpec extends SparkSuite {
   }
 
   test("short arrays yield null, filtered rows match the composed filter") {
-    CosineSimilarity.register(spark)
+    GraftExtensions.register(spark)
     val r = Seq("solo", "").toDF("text")
       .select(expr("gram_stats(split(text, ' '))").as("gs")).collect()
     assert(r.forall(_.isNullAt(0)),

@@ -148,10 +148,9 @@ class SessionizeSpec extends SparkSuite {
   test("cosine_sim registers into a fresh session and resolves from SQL") {
     // spark.sql.extensions is a static conf (can't apply to an existing
     // context), so the in-process test covers the runtime-registration
-    // path; the extensions injection path is driven via spark-shell
-    // --conf in the project verify recipe.
+    // path; GraftExtensionsSpec covers the extensions injection path.
     val s2 = spark.newSession()
-    graft.plans.CosineSimilarity.register(s2)
+    graft.plans.GraftExtensions.register(s2)
     val one = s2.sql(
       "SELECT cosine_sim(array(cast(1.0 as float)), array(cast(2.0 as float))) AS c")
       .head().getDouble(0)

@@ -25,11 +25,17 @@ build() { # $1 = commit, $2 = worktree dir
 WA=/tmp/paired_ab/wt_$A; WB=/tmp/paired_ab/wt_$B
 build "$A" "$WA"; build "$B" "$WB"
 
+# Size the bench JVM to this box, as the tier-1 test command does: one
+# slot per core, and half the RAM clamped to 2-8 GB of driver heap.
+CPUS=$(env -u OMP_NUM_THREADS nproc)
+MEM=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  2>/dev/null </proc/meminfo || echo 2g)
+
 run() { # $1 = worktree, $2 = out json
   # Bench prints TWO "metric" lines (the full per-query map, then a
   # top-15 tail line for truncated log windows) — keep only the FIRST,
   # the full map, or paired_ab.py's json.loads chokes on extra data
-  (cd "$1" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g \
+  (cd "$1" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" SPARK_DRIVER_MEM="$MEM" \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep -m1 '"metric"' > "$2")
 }
 
