@@ -25,13 +25,7 @@ object GateFixture {
       if (prior != null) prior
       else {
         try {
-          val root = java.nio.file.Files.createTempDirectory(name)
-          Runtime.getRuntime.addShutdownHook(new Thread(() => {
-            import java.nio.file.{Files, Path => JPath}
-            if (Files.exists(root))
-              Files.walk(root).sorted(java.util.Comparator.reverseOrder[JPath]())
-                .forEach(f => Files.deleteIfExists(f))
-          }))
+          val root = FileTree.deleteAtExit(java.nio.file.Files.createTempDirectory(name))
           fresh.complete(build(root))
         } catch {
           // NonFatal failures memoize into the future (losers see them)

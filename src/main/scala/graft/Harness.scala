@@ -12,16 +12,8 @@ object Harness {
 
   // One warehouse per JVM, removed at exit: the suite and the mains never
   // save a catalog table they need to outlive the process.
-  private lazy val warehouse: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      if (Files.exists(dir))
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }))
-    dir.toString
-  }
+  private lazy val warehouse: String =
+    FileTree.deleteAtExit(java.nio.file.Files.createTempDirectory("graft_wh")).toString
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, then
     * [[Tables.configure]] (UTC, the fixture timestamp settings, the

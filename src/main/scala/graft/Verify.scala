@@ -7,16 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
-    def deleteOut(name: String): Unit = {
-      val d = Paths.get(outDir, name)
-      if (Files.exists(d)) {
-        // a walk holds an open directory stream until closed
-        val walk = Files.walk(d)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }
+    def deleteOut(name: String): Unit = FileTree.delete(Paths.get(outDir, name))
     // Dev-only subset filter (comma-separated name prefixes): lets a
     // local iteration loop verify just the touched queries. Unset — the
     // driver's path — runs the full registry, unchanged.

@@ -23,8 +23,8 @@ object Views {
   /** Spark-side dialect rewrite: every `sqlDsum` emission —
     * `cast(sum(cast((e) as decimal(38,6))) as double)` — becomes the
     * native 128-bit accumulator `dsum6(e)` ([[graft.plans.Dsum6]],
-    * bit-identical on these domain-bounded columns, ~3× cheaper per
-    * row than the BigDecimal-backed decimal Sum). Only the EXECUTED
+    * bit-identical on these domain-bounded columns, and allocation-free
+    * per row where the decimal Sum adds a BigDecimal). Only the EXECUTED
     * text is rewritten; the oracle strings keep the decimal form
     * DuckDB reproduces. The match is anchored on sqlDsum's exact
     * prefix/suffix, so a view that stops using the helper simply stops

@@ -26,8 +26,10 @@ object Det {
     * accumulate). Routed through the native 128-bit-integer accumulator
     * [[graft.plans.Dsum6]] — bit-identical to
     * `sum(cast(c as decimal(38,6))).cast(double)` on any domain-bounded
-    * metric column (per-row |x| < ~4.6e12, loudly enforced), at plain
-    * long-add cost per row instead of a BigDecimal allocate-and-add. */
+    * metric column (per-row |x| < ~4.6e12, loudly enforced). Per row it
+    * costs a multiply, a floor and two long adds for |x| < ~1.1e6; larger
+    * magnitudes and values next to a 6th-place rounding tie pay one
+    * BigDecimal conversion, still no BigDecimal add. */
   def dsum(c: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(

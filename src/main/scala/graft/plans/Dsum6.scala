@@ -21,9 +21,12 @@ import org.apache.spark.sql.types._
   * the per-row value becomes its scale-6 unscaled long (the same
   * shortest-decimal-representation HALF_UP rounding Spark's double→
   * decimal cast applies — [[UnscaledDec6]]), update/merge are two-limb
-  * long adds (whole-stage-codegen'd, zero allocation), and only the
-  * per-GROUP finish converts 128-bit → BigDecimal(·, 6) → double, which
-  * is Decimal(38,6).toDouble exactly.
+  * long adds (whole-stage-codegen'd), and the per-GROUP finish is
+  * Decimal(38,6).toDouble exactly ([[Int128Dec6ToDouble]]). Per row that
+  * is a multiply, a floor and the limb adds, with no allocation, for
+  * |x| < ~1.1e6 (scaled below 2^40) outside a 2^-9-wide band around
+  * HALF_UP ties; larger magnitudes and tie-band values pay one
+  * BigDecimal conversion.
   *
   * Domain: per-row |x| must stay below ~4.6e12 (unscaled magnitude
   * ≤ 2^62), which every domain-bounded metric column (prices, durations,
@@ -149,12 +152,35 @@ case class UnscaledDec6(child: Expression) extends UnaryExpression {
 }
 
 object UnscaledDec6 {
+
+  private final val FastBound = 1099511627776.0 // 2^40
+  private final val TieBand = 0.001953125 // 2^-9
+
+  /** Fast path: HALF_UP of the double product x = |d|·1e6. Exact wherever
+    * taken: d's shortest decimal s lies within ½ ulp(d) of d, and the
+    * product rounds by ½ ulp(x) more, so x lies within 1.5 ulp(x) of
+    * s·1e6 — under 2^-12 when x < 2^40. HALF_UP only jumps at frac = ½,
+    * so outside the 2^-9 band around it, rounding x and rounding s·1e6
+    * agree. The band, larger magnitudes, NaN and ±Inf take [[exact]].
+    * Kept small so the JIT inlines it into the generated aggregate loop. */
   def unscaled(d: Double): Long = {
+    val x = Math.abs(d) * 1e6
+    val f = Math.floor(x)
+    val frac = x - f
+    if (x < FastBound && Math.abs(frac - 0.5) > TieBand) {
+      val u = f.toLong + (if (frac > 0.5) 1L else 0L)
+      if (d < 0) -u else u
+    } else exact(d)
+  }
+
+  /** The reference conversion: BigDecimal.valueOf (Spark's Decimal-from-
+    * double) rounded HALF_UP to 6 places, one BigDecimal per call. */
+  private def exact(d: Double): Long = {
     val u = java.math.BigDecimal.valueOf(d)
       .setScale(6, java.math.RoundingMode.HALF_UP).unscaledValue()
     if (u.bitLength() > 62)
       throw new ArithmeticException(
-        s"dsum6: |$d| exceeds the long-unscaled fast path's ~4.6e12 per-row bound; " +
+        s"dsum6: |$d| exceeds the ~4.6e12 per-row bound of a long unscaled value; " +
           "route this column through sum(cast(x as decimal(38,6)))")
     u.longValue()
   }
@@ -162,8 +188,8 @@ object UnscaledDec6 {
 
 /** The 128-bit accumulator (hi, lo) as a double: BigDecimal(hi·2^64 +
   * lo, scale 6).doubleValue() — exactly Decimal(38,6).toDouble. Runs
-  * once per GROUP, so the object arithmetic here is off the per-row
-  * path. */
+  * once per GROUP; sums below 2^52 unscaled take one double division,
+  * wider ones a BigInteger. */
 case class Int128Dec6ToDouble(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -192,9 +218,18 @@ case class Int128Dec6ToDouble(left: Expression, right: Expression)
 }
 
 object Int128Dec6ToDouble {
-  def toDouble(hi: Long, lo: Long): Double = {
-    val bi = java.math.BigInteger.valueOf(hi).shiftLeft(64)
-      .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
-    new java.math.BigDecimal(bi, 6).doubleValue()
-  }
+
+  private val Mask64 =
+    java.math.BigInteger.ONE.shiftLeft(64).subtract(java.math.BigInteger.ONE)
+
+  def toDouble(hi: Long, lo: Long): Double =
+    // the value fits a long of magnitude < 2^52: both operands are exact
+    // doubles, and one correctly rounded division is what JDK 17's
+    // BigDecimal.doubleValue computes for such a compact value
+    if (hi == (lo >> 63) && lo > -(1L << 52) && lo < (1L << 52)) lo.toDouble / 1e6
+    else {
+      val bi = java.math.BigInteger.valueOf(hi).shiftLeft(64)
+        .add(java.math.BigInteger.valueOf(lo).and(Mask64))
+      new java.math.BigDecimal(bi, 6).doubleValue()
+    }
 }

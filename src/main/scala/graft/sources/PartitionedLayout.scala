@@ -26,15 +26,8 @@ object PartitionedLayout {
   // write them once and every call after that only reads.
   private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def scratchDir(key: String): String = dirs.computeIfAbsent(key, { _ =>
-    val p = java.nio.file.Files.createTempDirectory(s"graft_layout_$key")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(p))
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }))
-    p.toString
+    graft.FileTree.deleteAtExit(
+      java.nio.file.Files.createTempDirectory(s"graft_layout_$key")).toString
   })
 
   private val partitionedWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -60,16 +60,8 @@ object StreamingOracle {
 
   // ---- scratch management -------------------------------------------------
 
-  private lazy val scratchRoot: Path = {
-    val p = Files.createTempDirectory("graft_stream_oracle")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p)))
-    p
-  }
-
-  private def deleteRec(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
+  private lazy val scratchRoot: Path =
+    graft.FileTree.deleteAtExit(Files.createTempDirectory("graft_stream_oracle"))
 
   // Each invocation gets a FRESH checkpoint + sink dir (so re-runs
   // genuinely re-execute the stream). A previous invocation's dir is NOT
@@ -445,7 +437,7 @@ object StreamingOracle {
           val dst = dir.resolve(f"$i%03d.parquet")
           Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
           dst.toFile.setLastModified(SliceEpochMs + i * 60000L)
-          deleteRec(tmp)
+          graft.FileTree.delete(tmp)
         }
         dir.toString
       })

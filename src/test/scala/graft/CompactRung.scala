@@ -28,12 +28,6 @@ import graft.etl.SnapshotMerge
   */
 object CompactRung {
 
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-
   private def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
     java.nio.file.Files.walk(src).forEach { p =>
       val t = dst.resolve(src.relativize(p))
@@ -47,8 +41,7 @@ object CompactRung {
     val passes = sys.env.get("GRAFT_COMPACT_PASSES").map(_.toInt).getOrElse(2)
     val spark = Harness.session(Harness.cpus)
 
-    val root = java.nio.file.Files.createTempDirectory("graft_compact_rung")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
+    val root = FileTree.deleteAtExit(java.nio.file.Files.createTempDirectory("graft_compact_rung"))
     val template = root.resolve("template/store")
 
     // ~1 GB fat partition: high-entropy sha2 payloads parquet cannot
@@ -95,7 +88,7 @@ object CompactRung {
       println(f"$variant,$pass,$sec%.2f,$files,${maxB / 1048576.0}%.1f,${n == expected}")
       Console.flush()
       CacheScope.releaseAll()
-      deleteRec(work)
+      FileTree.delete(work)
     }
 
     for (p <- 1 to passes) {

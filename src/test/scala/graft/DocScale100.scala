@@ -47,13 +47,7 @@ object DocScale100 {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(Harness.cpus)
 
-    val scratch = java.nio.file.Files.createTempDirectory("graft_doc100x")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      if (Files.exists(scratch))
-        Files.walk(scratch).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }))
+    val scratch = FileTree.deleteAtExit(java.nio.file.Files.createTempDirectory("graft_doc100x"))
     // the 1×/10×/100× rungs; each dir carries documents + embeddings —
     // everything the probed tier reads
     val rungs: Seq[(Int, String)] = Seq(1, 10, 100).map { c =>

@@ -64,13 +64,7 @@ object LadderScale {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(Harness.cpus)
 
-    val scratch = java.nio.file.Files.createTempDirectory("graft_ladder10x")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      if (Files.exists(scratch))
-        Files.walk(scratch).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }))
+    val scratch = FileTree.deleteAtExit(java.nio.file.Files.createTempDirectory("graft_ladder10x"))
     val x10 = amplifyEvents(spark, base, scratch.toString)
     val rungs = Seq(1 -> base, Copies -> x10)
 

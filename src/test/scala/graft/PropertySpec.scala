@@ -318,17 +318,8 @@ object PropertySpec extends Properties("graft") {
   // one scratch root for ALL snapshot-chain trials, deleted on JVM exit
   // (a per-trial createTempDirectory with no hook would leak ten parquet
   // stores per suite run)
-  private lazy val snapPropRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_prop_snap")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path => JPath}
-      import java.util.Comparator
-      if (Files.exists(p))
-        Files.walk(p).sorted(Comparator.reverseOrder[JPath]())
-          .forEach(f => { Files.deleteIfExists(f); () })
-    }))
-    p
-  }
+  private lazy val snapPropRoot: java.nio.file.Path =
+    FileTree.deleteAtExit(java.nio.file.Files.createTempDirectory("graft_prop_snap"))
 
   property("snapshot store: a MERGE chain ≡ the last-writer fold; every epoch time-travels to its prefix") = {
     val genBatch = Gen.nonEmptyListOf(genEvent).map(_.distinctBy(_._1).take(12))

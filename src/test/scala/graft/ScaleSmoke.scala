@@ -45,13 +45,7 @@ object ScaleSmoke {
   }
 
   private[graft] def build10x(spark: SparkSession, base: String): String = {
-    val out = java.nio.file.Files.createTempDirectory("graft_scale10x")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      if (Files.exists(out))
-        Files.walk(out).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }))
+    val out = FileTree.deleteAtExit(java.nio.file.Files.createTempDirectory("graft_scale10x"))
     amplifyEvents(spark, base).write.parquet(s"$out/events.parquet")
     amplifyLineitem(spark, base).write.parquet(s"$out/lineitem.parquet")
     // orders shift WITH lineitem (same key offset), so every order keeps

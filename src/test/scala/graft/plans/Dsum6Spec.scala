@@ -1,7 +1,12 @@
 package graft.plans
 
+import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.SparkSuite
 
@@ -11,7 +16,9 @@ import graft.SparkSuite
   * null rows, all-null groups, NaN/Inf rows, negative zero, subnormal
   * noise, half-up rounding ties, and partial/merge paths (the suite's
   * 4 shuffle partitions force merges). Beyond the domain the aggregate
-  * must FAIL LOUDLY, never degrade. */
+  * must FAIL LOUDLY, never degrade. The per-row kernel and the per-group
+  * finish are also pinned value by value against their BigDecimal
+  * definitions, where a group sum could hide per-row errors that cancel. */
 class Dsum6Spec extends SparkSuite {
 
   import spark.implicits._
@@ -98,5 +105,137 @@ class Dsum6Spec extends SparkSuite {
     val want2 = mixed.toDF("v").repartition(8)
       .agg(decimalSum(col("v"))).head().getDouble(0)
     assert(got2 === want2, s"signed carry path: $got2 != $want2")
+  }
+
+  // ---- per-row kernel and per-group finish, value by value ----
+
+  /** `cast(d as decimal(38,6))`'s unscaled long, or the exception class
+    * name: the definition [[UnscaledDec6.unscaled]] must reproduce. */
+  private def reference(d: Double): Any =
+    try {
+      val u = JBigDecimal.valueOf(d).setScale(6, RoundingMode.HALF_UP).unscaledValue()
+      if (u.bitLength() > 62) "ArithmeticException" else u.longValue()
+    } catch { case e: NumberFormatException => e.getClass.getSimpleName }
+
+  private def kernel(d: Double): Any =
+    try UnscaledDec6.unscaled(d)
+    catch { case e: RuntimeException => e.getClass.getSimpleName }
+
+  /** `d` and its 1–4-ulp neighbours on both sides, with both signs. */
+  private def withNeighbours(d: Double, out: scala.collection.mutable.ArrayBuilder[Double]): Unit = {
+    var up = d
+    var down = d
+    out += d
+    out += -d
+    for (_ <- 1 to 4) {
+      up = Math.nextUp(up)
+      down = Math.nextDown(down)
+      out += up; out += -up; out += down; out += -down
+    }
+  }
+
+  /** ≥5M seeded doubles aimed at every place the fast path could go
+    * wrong: ties, the 2^40 fast-path bound, the 2^62 domain edge, signs,
+    * zeros and subnormals. */
+  private lazy val kernelInputs: Array[Double] = {
+    val rnd = new scala.util.Random(20261017)
+    val out = Array.newBuilder[Double]
+    // the nearest double to the HALF_UP tie k·5e-7 (k odd)
+    def tie(k: Long): Double =
+      new JBigDecimal(BigInteger.valueOf(k).multiply(BigInteger.valueOf(5)), 7).doubleValue()
+    // every tie below 0.1, then odd k spread log-uniformly up to the
+    // 4.6e12 domain edge (k < 2^63)
+    var k = 1L
+    while (k < 200000L) { withNeighbours(tie(k), out); k += 2 }
+    for (_ <- 0 until 200000) {
+      val bits = 1 + rnd.nextInt(62)
+      val kk = ((1L << bits) + (rnd.nextLong() & ((1L << bits) - 1))) | 1L
+      withNeighbours(tie(kk), out)
+    }
+    // both sides of the fast-path bound x = |d|·1e6 = 2^40
+    val bound = 1099511.627776
+    var a = bound
+    var b = bound
+    for (_ <- 0 until 20000) {
+      out += a; out += -a; out += b; out += -b
+      a = Math.nextUp(a); b = Math.nextDown(b)
+    }
+    for (_ <- 0 until 100000) out += bound * (0.99 + 0.02 * rnd.nextDouble())
+    // both sides of the 2^62 unscaled domain edge (~4.6e12)
+    val edge = 4611686018427.387904
+    a = edge; b = edge
+    for (_ <- 0 until 5000) {
+      out += a; out += -a; out += b; out += -b
+      a = Math.nextUp(a); b = Math.nextDown(b)
+    }
+    out ++= Seq(4.6e12, -4.6e12, 5e12, -5e12, 1e300, -1e300)
+    // zeros, subnormals, the smallest normal
+    out ++= Seq(0.0, -0.0, java.lang.Double.MIN_VALUE, -java.lang.Double.MIN_VALUE,
+      java.lang.Double.MIN_NORMAL, -java.lang.Double.MIN_NORMAL)
+    for (_ <- 0 until 10000)
+      out += java.lang.Double.longBitsToDouble(rnd.nextLong() & 0x800fffffffffffffL)
+    // random magnitudes across the whole domain, and short decimals
+    for (_ <- 0 until 1000000)
+      out += (rnd.nextDouble() - 0.5) * Math.pow(10, rnd.nextInt(20) - 7)
+    for (_ <- 0 until 300000)
+      out += (rnd.nextLong() % 100000000000L) / Math.pow(10, rnd.nextInt(9))
+    out.result()
+  }
+
+  test("per-row kernel: unscaled equals the BigDecimal reference on every value") {
+    val in = kernelInputs
+    assert(in.length >= 5000000, s"only ${in.length} inputs")
+    val bad = in.iterator.filter(d => kernel(d) != reference(d)).take(5).toList
+    val n = if (bad.isEmpty) 0 else in.count(d => kernel(d) != reference(d))
+    assert(n === 0, s"$n of ${in.length} values differ; first: " +
+      bad.map(d => s"$d -> ${kernel(d)} want ${reference(d)}").mkString(", "))
+    // NaN and ±Inf keep the reference's exception
+    for (d <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity))
+      assert(kernel(d) === reference(d), s"$d")
+  }
+
+  test("per-row kernel: interpreted eval and codegen agree") {
+    val e = UnscaledDec6(BoundReference(0, DoubleType, nullable = true))
+    val domain = kernelInputs.iterator.filter(d => Math.abs(d) < 4.6e12).take(500000)
+    val special = Iterator[Any](null, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0)
+    val gen = GenerateUnsafeProjection.generate(Seq(e))
+    val n = (domain ++ special).count { v =>
+      val r = InternalRow(v)
+      val want = e.eval(r)
+      val got = gen(r)
+      if (want == null) !got.isNullAt(0) else got.isNullAt(0) || got.getLong(0) != want
+    }
+    assert(n === 0, s"$n rows differ between eval and codegen")
+  }
+
+  test("per-group finish: toDouble equals BigDecimal(hi·2^64+lo, 6).doubleValue") {
+    def want(hi: Long, lo: Long): Double =
+      new JBigDecimal(BigInteger.valueOf(hi).shiftLeft(64)
+        .add(new BigInteger(java.lang.Long.toUnsignedString(lo))), 6).doubleValue()
+    val rnd = new scala.util.Random(52)
+    val centres = Seq(0L, 1L << 52, -(1L << 52), Long.MaxValue, Long.MinValue,
+      (1L << 53) + 1, -(1L << 53) - 1)
+    val pairs =
+      (for {
+        c <- centres
+        off <- -2000L to 2000L
+        hi <- Seq(0L, -1L, 1L, -2L)
+      } yield (hi, c + off)) ++
+        Seq.fill(200000)((rnd.nextLong() >> rnd.nextInt(64), rnd.nextLong())) ++
+        Seq.fill(200000)({ val lo = rnd.nextLong() >> rnd.nextInt(64); (lo >> 63, lo) })
+    val bad = pairs.filter { case (hi, lo) =>
+      java.lang.Double.doubleToRawLongBits(Int128Dec6ToDouble.toDouble(hi, lo)) !=
+        java.lang.Double.doubleToRawLongBits(want(hi, lo))
+    }
+    assert(bad.isEmpty, s"${bad.size} of ${pairs.size} differ; first: ${bad.take(5)}")
+    val e = Int128Dec6ToDouble(BoundReference(0, LongType, nullable = false),
+      BoundReference(1, LongType, nullable = false))
+    val gen = GenerateUnsafeProjection.generate(Seq(e))
+    val genBad = pairs.take(100000).count { case (hi, lo) =>
+      val r = InternalRow(hi, lo)
+      gen(r).getDouble(0) != e.eval(r).asInstanceOf[Double]
+    }
+    assert(genBad === 0, s"$genBad (hi, lo) pairs differ between eval and codegen")
   }
 }

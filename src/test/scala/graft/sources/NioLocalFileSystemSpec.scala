@@ -22,8 +22,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
   private def withRoot(body: JPath => Unit): Unit = {
     val root = Files.createTempDirectory("graft_niofs")
     try body(root)
-    finally Files.walk(root).sorted(java.util.Comparator.reverseOrder[JPath]())
-      .forEach(f => Files.deleteIfExists(f))
+    finally graft.FileTree.delete(root)
   }
 
   test("applies the same mode bits as RawLocalFileSystem to files and dirs") {

@@ -1,76 +1,83 @@
 #!/usr/bin/env python3
-"""Paired per-query deltas + sign test over paired_ab.sh output.
+"""Summarise a tools/paired_ab.sh run: per end-to-end metric of
+BENCHMARK.json, each side's median and quartiles, the pairs the change (B)
+won, and the gain verdict: at least ten pairs, B wins at least nine
+tenths of them (ties count for neither side), and the medians differ, in
+B's favour, by more than the distance between A's quartiles. It also
+flags a B median worse than A's by more than the metric's bound.
 
-Reads a_pass<i>.json / b_pass<i>.json Bench lines from the directory
-given as argv[1]; pairs pass i of A with pass i of B (interleaved on the
-same box phase), differences each query within its pair, and reports the
-median paired delta, win/loss counts, and the exact two-sided binomial
-sign-test p-value per query plus the common-subset total. Queries in
-only one commit are listed separately, never silently dropped.
+    python3 tools/paired_ab.py <dir with a_pair<i>.json / b_pair<i>.json>
 """
 import glob
 import json
-import math
 import os
+import re
+import statistics
 import sys
 
-
-def sign_p(w, l):
-    n = w + l
-    if n == 0:
-        return 1.0
-    k = min(w, l)
-    tail = sum(math.comb(n, i) for i in range(k + 1))
-    return min(1.0, 2.0 * tail / 2 ** n)
+BENCHMARK = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "BENCHMARK.json")
 
 
-def load(path):
-    # Bench can emit two "metric" lines (full map + top-15 tail); take
-    # the line with the LARGEST queries map so a stray second line —
-    # or a pass file captured without grep -m1 — never crashes the load
+def result(path):
+    """The run's result line, or None when the run printed none."""
+    if not os.path.exists(path):
+        return None
     with open(path) as f:
-        lines = [json.loads(x) for x in f.read().splitlines() if x.strip()]
-    return max((x["queries"] for x in lines), key=len)
+        lines = [x for x in f.read().splitlines() if x.strip()]
+    return json.loads(lines[-1]) if lines else None
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4)
+    return q1, statistics.median(xs), q3
+
+
+def verdict(a, b, lower_better):
+    """(B's pair wins, gain?) for paired values a[i], b[i]."""
+    better = (lambda x, y: y < x) if lower_better else (lambda x, y: y > x)
+    wins = sum(1 for x, y in zip(a, b) if better(x, y))
+    q1, med_a, q3 = quartiles(a)
+    med_b = statistics.median(b)
+    gap = (med_a - med_b) if lower_better else (med_b - med_a)
+    return wins, len(a) >= 10 and wins >= 0.9 * len(a) and gap > q3 - q1
 
 
 def main(d):
-    a_passes = sorted(glob.glob(os.path.join(d, "a_pass*.json")))
-    b_passes = sorted(glob.glob(os.path.join(d, "b_pass*.json")))
-    assert len(a_passes) == len(b_passes) and a_passes, "unbalanced passes"
-    pairs = [(load(a), load(b)) for a, b in zip(a_passes, b_passes)]
-    common = set(pairs[0][0]) & set(pairs[0][1])
-    only_a = set(pairs[0][0]) - common
-    only_b = set(pairs[0][1]) - common
-    rows = []
-    for q in sorted(common):
-        deltas = [a[q] - b[q] for a, b in pairs]
-        med = sorted(deltas)[len(deltas) // 2] if len(deltas) % 2 else sum(
-            sorted(deltas)[len(deltas) // 2 - 1:len(deltas) // 2 + 1]) / 2
-        w = sum(1 for x in deltas if x < 0)
-        l = sum(1 for x in deltas if x > 0)
-        rows.append((q, med, w, l, sign_p(w, l)))
-    print("query,median_delta_sec,a_wins,a_losses,p_sign")
-    for q, med, w, l, p in rows:
-        print(f"{q},{med:.3f},{w},{l},{p:.3f}")
-    tot = [(sum(a[q] for q in common), sum(b[q] for q in common))
-           for a, b in pairs]
-    tdeltas = sorted(ta - tb for ta, tb in tot)
-    tmed = tdeltas[len(tdeltas) // 2] if len(tdeltas) % 2 else (
-        tdeltas[len(tdeltas) // 2 - 1] + tdeltas[len(tdeltas) // 2]) / 2
-    tw = sum(1 for x in tdeltas if x < 0)
-    tl = sum(1 for x in tdeltas if x > 0)
-    ratios = [ta / tb for ta, tb in tot]
-    print(f"TOTAL_common_{len(common)},{tmed:.3f},{tw},{tl},{sign_p(tw, tl):.3f}")
-    print(f"total_ratio_a_over_b,{','.join(f'{r:.3f}' for r in sorted(ratios))}")
-    big = [(q, m) for q, m, w, l, p in rows if abs(m) >= 0.25 and p <= 0.25]
-    if big:
-        print("notable (|median| >= 0.25s, p <= 0.25): " +
-              "; ".join(f"{q} {m:+.2f}s" for q, m in
-                        sorted(big, key=lambda x: x[1])))
-    if only_a:
-        print("only_in_a: " + ",".join(sorted(only_a)))
-    if only_b:
-        print("only_in_b: " + ",".join(sorted(only_b)))
+    with open(BENCHMARK) as f:
+        metrics = json.load(f)["end_to_end"]
+    idx = sorted(int(re.search(r"(\d+)\.json$", p).group(1))
+                 for p in glob.glob(os.path.join(d, "a_pair*.json")))
+    pairs, broken = [], []
+    for i in idx:
+        ra = result(os.path.join(d, f"a_pair{i}.json"))
+        rb = result(os.path.join(d, f"b_pair{i}.json"))
+        if ra is None or rb is None or "metrics" not in ra or "metrics" not in rb:
+            broken.append(i)
+        else:
+            pairs.append((ra, rb))
+    if not pairs:
+        sys.exit(f"no complete pairs under {d}")
+    print(f"{len(pairs)} complete pairs" + (f"; pairs without a result: {broken}" if broken else ""))
+    for side, k in (("A", 0), ("B", 1)):
+        failed = sum(p[k]["failed"] for p in pairs)
+        attempted = sum(p[k]["attempted"] for p in pairs)
+        wrong = sum(1 for p in pairs if not p[k]["correct"])
+        print(f"{side}: {failed} of {attempted} ops failed, {wrong} runs not correct")
+    print("metric,better,A_q1,A_median,A_q3,B_q1,B_median,B_q3,B_wins,gain,B_vs_A,bound,within_bound")
+    for m in metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        a = [p[0]["metrics"][name]["value"] for p in pairs]
+        b = [p[1]["metrics"][name]["value"] for p in pairs]
+        wins, gain = verdict(a, b, lower)
+        aq, bq = quartiles(a), quartiles(b)
+        rel = (bq[1] - aq[1]) / aq[1] if aq[1] else 0.0
+        worse = rel if lower else -rel
+        print(f"{name},{m['better']},{aq[0]:.4g},{aq[1]:.4g},{aq[2]:.4g},"
+              f"{bq[0]:.4g},{bq[1]:.4g},{bq[2]:.4g},{wins}/{len(pairs)},"
+              f"{'yes' if gain else 'no'},{rel:+.1%},{m['bound']},"
+              f"{'yes' if worse <= m['bound'] else 'NO'}")
 
 
 if __name__ == "__main__":

@@ -1,53 +1,53 @@
 #!/usr/bin/env bash
-# Paired same-box A/B bench between two commits (r14 verdict #2).
+# Paired, alternating A/B of the benchmark (perfbench/run.py) between two
+# commits on one box: A is the baseline (the parent), B the change.
 #
-# The box's measured drift (1.30x on identical code across a day, 1.35x
-# median per-query swing) poisons cross-day BENCH comparisons; r14's
-# defense — rebuild the old tip in a worktree and bench both back to
-# back — is codified here with interleaving: the two builds run
-# ALTERNATING full Bench passes (A B B A A B ... balanced pairs), and
-# the paired per-query deltas + sign test come from tools/paired_ab.py.
-#
-# Usage: tools/paired_ab.sh <commitA> <commitB> [pairs=3] [sfDir=/root/testdata/sf0.1]
-# Output: /tmp/paired_ab/<A>_<B>/{a,b}_pass<i>.json + paired_summary.txt
+# Usage: tools/paired_ab.sh <A> <B> <workload> [pairs=10] [seed]
+#   A, B      commits; each is exported with `git archive` into its own
+#             directory and its benchmark classes are built once, untimed
+#   workload  registry_sf01, ingest_stream or registry_x10
+#   pairs     odd pairs run A first, even pairs run B first
+#   seed      one seed for every run (e.g. the held-out 7919); without it
+#             pair i runs seed i on both sides
+# Every run is `--seconds <BENCHMARK.json run_seconds> --trace 0`.
+# Output: ${PAIRED_AB_OUT:-/tmp/paired_ab/<A>_<B>_<workload>}/{a,b}_pair<i>.json
+# (each run's report and result lines) and summary.txt (tools/paired_ab.py).
 set -euo pipefail
-A=${1:?commitA}; B=${2:?commitB}
-PAIRS=${3:-3}
-SF=${4:-/root/testdata/sf0.1}
+A=${1:?commit A}; B=${2:?commit B}; W=${3:?workload}
+PAIRS=${4:-10}
+SEED=${5:-}
 ROOT=$(git rev-parse --show-toplevel)
-OUT=/tmp/paired_ab/${A}_${B}
+RA=$(git -C "$ROOT" rev-parse --short "$A"); RB=$(git -C "$ROOT" rev-parse --short "$B")
+OUT=${PAIRED_AB_OUT:-/tmp/paired_ab/${RA}_${RB}_${W}}
+SECONDS_PER_RUN=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$ROOT/BENCHMARK.json")
 mkdir -p "$OUT"
 
-build() { # $1 = commit, $2 = worktree dir
-  if [ ! -d "$2" ]; then git -C "$ROOT" worktree add --detach "$2" "$1"; fi
-  (cd "$2" && sbt -batch compile > /dev/null)
+checkout() { # $1 = commit, $2 = dir
+  if [ ! -d "$2" ]; then
+    mkdir -p "$2"
+    git -C "$ROOT" archive "$1" | tar -x -C "$2"
+  fi
+  (cd "$2" && python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run
+run.build(".", ".bench_build", run.spark_jars())')
 }
-WA=/tmp/paired_ab/wt_$A; WB=/tmp/paired_ab/wt_$B
-build "$A" "$WA"; build "$B" "$WB"
+DA=$OUT/src_a; DB=$OUT/src_b
+checkout "$RA" "$DA"; checkout "$RB" "$DB"
 
-# Size the bench JVM to this box, as the tier-1 test command does: one
-# slot per core, and half the RAM clamped to 2-8 GB of driver heap.
-CPUS=$(env -u OMP_NUM_THREADS nproc)
-MEM=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
-  2>/dev/null </proc/meminfo || echo 2g)
-
-run() { # $1 = worktree, $2 = out json
-  # Bench prints TWO "metric" lines (the full per-query map, then a
-  # top-15 tail line for truncated log windows) — keep only the FIRST,
-  # the full map, or paired_ab.py's json.loads chokes on extra data
-  (cd "$1" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" SPARK_DRIVER_MEM="$MEM" \
-    sbt -batch "runMain graft.Bench" 2>/dev/null | grep -m1 '"metric"' > "$2")
+run() { # $1 = checkout, $2 = seed, $3 = out file
+  (cd "$1" && python3 perfbench/run.py --workload "$W" --seed "$2" \
+    --seconds "$SECONDS_PER_RUN" --trace 0) > "$3" 2>> "$OUT/stderr.log" \
+    || echo "run failed: $3" >&2
 }
 
 for i in $(seq 1 "$PAIRS"); do
-  # alternate order each pair so neither commit owns the warmer slot
+  s=${SEED:-$i}
   if [ $((i % 2)) -eq 1 ]; then
-    run "$WA" "$OUT/a_pass$i.json"; run "$WB" "$OUT/b_pass$i.json"
+    run "$DA" "$s" "$OUT/a_pair$i.json"; run "$DB" "$s" "$OUT/b_pair$i.json"
   else
-    run "$WB" "$OUT/b_pass$i.json"; run "$WA" "$OUT/a_pass$i.json"
+    run "$DB" "$s" "$OUT/b_pair$i.json"; run "$DA" "$s" "$OUT/a_pair$i.json"
   fi
-  echo "pair $i done"
+  echo "pair $i (seed $s) done"
 done
 
-python3 "$ROOT/tools/paired_ab.py" "$OUT" | tee "$OUT/paired_summary.txt"
-echo "NOTE: remove worktrees when done: git worktree remove $WA $WB --force"
+python3 "$ROOT/tools/paired_ab.py" "$OUT" | tee "$OUT/summary.txt"
