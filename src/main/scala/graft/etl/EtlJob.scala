@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The phased incremental ETL job runner (reference:
@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * Differences from the reference, on purpose: phase counts come from one
   * cached pass instead of recomputing the frame per `df.count()` (the
   * reference recomputes the whole lineage at ETL:422/456), and the load
-  * is the partition-pruned MERGE rewrite instead of blind append.
+  * is a [[SnapshotMerge.upsert]] into the target store instead of blind
+  * append.
   */
 object EtlJob {
 
@@ -29,48 +30,49 @@ object EtlJob {
       partitionCol: String,
       quarantineDir: Option[String] = None): Metrics = {
 
-    // extract (incremental, pushdown-friendly watermark filter). Probe
-    // existence via the filesystem — a try/catch around the read would
-    // misread a transient storage error as "no target" and silently
-    // disable incremental filtering for the run.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(targetDir), spark.sparkContext.hadoopConfiguration)
-    val targetExists = fs.exists(new org.apache.hadoop.fs.Path(targetDir))
-    val fresh =
-      if (targetExists) Incremental.newRows(source, spark.read.parquet(targetDir), watermarkCol)
-      else source
-    val freshC = fresh.cache()
-    val extracted = freshC.count()
+    // extract (incremental, pushdown-friendly watermark filter). The
+    // watermark comes from the committed snapshot only: files a crashed
+    // load left under the target belong to no manifest, so they can
+    // neither raise the watermark nor be read as loaded rows.
+    val fresh = SnapshotMerge.tipEpoch(spark, targetDir) match {
+      case Some(e) => Incremental.newRows(source,
+        SnapshotMerge.read(spark, targetDir, Some(e)), watermarkCol)
+      case None => source
+    }
+    // every frame cached below is unpersisted however the run ends
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    try {
+      val freshC = cache(fresh)
+      val extracted = freshC.count()
 
-    // validate + quarantine (the quarantine WRITE happens after a
-    // successful load — the watermark only advances on success, so
-    // writing earlier would duplicate quarantine rows on every retry)
-    val validated = Quality.validate(freshC, rules).cache()
-    val (clean, quarantined) = Quality.quarantine(validated)
-    val validN = clean.count()
-    val quarN = quarantined.count()
-    val quality = if (extracted == 0) 1.0 else validN.toDouble / extracted
+      // validate + quarantine (the quarantine WRITE happens after a
+      // successful load — the watermark only advances on success, so
+      // writing earlier would duplicate quarantine rows on every retry)
+      val validated = cache(Quality.validate(freshC, rules))
+      val (clean, quarantined) = Quality.quarantine(validated)
+      val validN = clean.count()
+      val quarN = quarantined.count()
+      val quality = if (extracted == 0) 1.0 else validN.toDouble / extracted
 
-    // dedup — tie-break on every non-key column so equal-watermark
-    // duplicates have a deterministic survivor (the keys themselves are
-    // constant within a window partition and break no ties)
-    val cleanCols = clean.drop("_dq_errors", "_dq_valid", "_dq_score")
-    val tieBreak = Seq(col(watermarkCol)) ++
-      cleanCols.columns.filterNot(c => keys.contains(c) || c == watermarkCol).sorted.map(col)
-    val deduped = Dedup.keepLatest(cleanCols, keys, tieBreak).cache()
-    val dedupN = deduped.count()
+      // dedup — tie-break on every non-key column so equal-watermark
+      // duplicates have a deterministic survivor (the keys themselves are
+      // constant within a window partition and break no ties)
+      val cleanCols = clean.drop("_dq_errors", "_dq_valid", "_dq_score")
+      val tieBreak = Seq(col(watermarkCol)) ++
+        cleanCols.columns.filterNot(c => keys.contains(c) || c == watermarkCol).sorted.map(col)
+      val deduped = cache(Dedup.keepLatest(cleanCols, keys, tieBreak))
+      val dedupN = deduped.count()
 
-    // transform + load (partition-pruned upsert); count from the cached
-    // frame so the transform runs once, not once per action
-    val out = transform(deduped).cache()
-    val loaded = out.count()
-    if (targetExists)
-      Merge.upsertIntoParquet(spark, targetDir, out, keys, partitionCol)
-    else
-      out.write.partitionBy(partitionCol).parquet(targetDir)
-    quarantineDir.foreach(d => quarantined.write.mode(SaveMode.Append).parquet(d))
+      // transform + load (partition-pruned snapshot MERGE; an empty
+      // target bootstraps through the same call); count from the cached
+      // frame so the transform runs once, not once per action
+      val out = cache(transform(deduped))
+      val loaded = out.count()
+      SnapshotMerge.upsert(spark, targetDir, out, keys, partitionCol)
+      quarantineDir.foreach(d => quarantined.write.mode(SaveMode.Append).parquet(d))
 
-    freshC.unpersist(); validated.unpersist(); deduped.unpersist(); out.unpersist()
-    Metrics(extracted, validN, quarN, dedupN, loaded, quality)
+      Metrics(extracted, validN, quarN, dedupN, loaded, quality)
+    } finally cached.foreach(_.unpersist())
   }
 }

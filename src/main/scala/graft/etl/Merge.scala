@@ -1,19 +1,19 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Lakehouse mutations over plain Parquet (no Delta jar in this env).
+/** Lakehouse mutations as pure DataFrame transforms (no Delta jar in
+  * this env).
   *
   * S7 MERGE upsert (reference: etl_framework.py:635-655, delta_setup.py:636-668),
   * S8 DELETE/UPDATE by predicate (delta_setup.py:670-702).
   *
   * Scale posture: `upsert` is one shuffled left-anti join on the merge keys
-  * plus a union — both sides stay distributed; nothing is collected. The
-  * table-directory variant rewrites only the partitions the source touches
-  * (partition pruning on write), which is the property that matters at
-  * 100 TB: a day's late data rewrites a day, not the table. Single-writer
-  * semantics, matching the reference's usage.
+  * plus a union — both sides stay distributed; nothing is collected.
+  * Persisting a merge is [[SnapshotMerge]]'s job: it applies these row
+  * semantics to the touched partitions only and commits them as one
+  * snapshot epoch.
   */
 object Merge {
 
@@ -68,110 +68,5 @@ object Merge {
         case None => col(name)
       }
     }: _*)
-  }
-
-  /** MERGE into a partitioned parquet table directory, rewriting only the
-    * partitions the merge touches. `partitionCol` must be a column of
-    * both sides (e.g. a derived `day`).
-    *
-    * "Touched" = partitions the source writes into PLUS partitions where
-    * a matched target row currently lives — a key whose partition value
-    * changed (a corrected event date) must have its old row rewritten out
-    * or the table would hold the key twice. Null partition values join
-    * null-safely so existing null-partition rows merge instead of being
-    * dropped by the swap. */
-  def upsertIntoParquet(
-      spark: SparkSession,
-      targetDir: String,
-      source: DataFrame,
-      keys: Seq[String],
-      partitionCol: String): Unit = {
-    // touched-partition dir names are derived from collected values via
-    // toString — refuse partition types whose string form does not
-    // round-trip Spark's partition paths (timestamps, floats, decimals:
-    // a mismatch would leave a moved-out key served from two partitions)
-    SnapshotMerge.requirePathStablePartitionType(
-      source.schema(partitionCol).dataType, partitionCol)
-    // CONCURRENT-WRITER detect-and-fail (r15): optimistic concurrency
-    // on the store's epoch counter. Read the base epoch BEFORE reading
-    // the table; the claim of base+1 happens below, after staging and
-    // before the first partition rename — a second writer whose merge
-    // was computed against this same base loses the atomic create and
-    // aborts without touching any partition (Delta gives reference
-    // users this via its log; plain parquet stores carry epoch files
-    // instead). Serial writers all succeed.
-    val baseEpoch = graft.sources.CommitMarker.currentEpoch(spark, targetDir)
-    val target = spark.read.parquet(targetDir)
-    val sourceParts = source.select(partitionCol).distinct()
-    val movedParts = target
-      .join(source.select(keys.map(col): _*).distinct(), keys, "left_semi")
-      .select(partitionCol).distinct()
-    val touched = sourceParts.union(movedParts).distinct()
-    // Only read+rewrite affected partitions; untouched partitions keep
-    // their files. Null-safe equality keeps null-partition rows in scope.
-    val affected = target.join(broadcast(touched.withColumnRenamed(partitionCol, "__p")),
-      target(partitionCol) <=> col("__p"), "left_semi")
-    val merged = upsert(affected, source, keys)
-    // Materialize the touched-partition list BEFORE the swap mutates the
-    // files its plan reads. This collect is partition *metadata* (one
-    // value per touched partition), not data.
-    val touchedVals = touched.collect().map(r => Option(r.get(0)).map(_.toString))
-    // staging is per-writer (r15): two concurrent writers sharing one
-    // fixed staging dir would clobber each other BEFORE the epoch claim
-    // can arbitrate; a crashed writer's orphan staging dir is inert (a
-    // sibling path no reader ever lists) and the next successful merge
-    // of the same epoch never sees it
-    val staging = targetDir.stripSuffix("/") + "__staging_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(targetDir), spark.sparkContext.hadoopConfiguration)
-    import org.apache.hadoop.fs.Path
-    val stagingPath = new Path(staging)
-    // any failure from the staging write through the publish claim
-    // cleans its own staging dir (the fixed-name scheme self-healed by
-    // overwriting; per-writer names must self-clean instead — only a
-    // hard kill can orphan one, and orphans are inert sibling dirs)
-    try {
-      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging)
-      // publish gate: claim epoch base+1 now that the merge is staged —
-      // throws ConcurrentWriteException (staging cleaned up, target
-      // untouched) when any writer committed since our base read
-      graft.sources.CommitMarker.claimEpochFrom(spark, targetDir, baseEpoch)
-    } catch {
-      case e: Throwable =>
-        try fs.delete(stagingPath, true) catch { case _: Throwable => () }
-        throw e
-    }
-    val stagingDirs = fs.listStatus(stagingPath).filter(_.isDirectory)
-    val stagingNames = stagingDirs.map(_.getPath.getName).toSet
-    stagingDirs.foreach { st =>
-      val dest = new Path(targetDir, st.getPath.getName)
-      if (fs.exists(dest)) fs.delete(dest, true)
-      // rename reports failure as FALSE on several filesystems; the old
-      // partition is already deleted here, so the staged dir now holds
-      // the ONLY copy of this partition's rows — surface the failure and
-      // leave staging in place for recovery instead of deleting it
-      if (!fs.rename(st.getPath, dest))
-        throw new java.io.IOException(
-          s"failed to publish staged partition ${st.getPath} to $dest — " +
-            s"the partition's rows are preserved at $staging; restore " +
-            "them manually before the next merge")
-    }
-    fs.delete(stagingPath, true)
-    // A touched partition can end up EMPTY after the merge (its only rows
-    // were matched keys whose partition value moved): Spark writes no
-    // staging dir for it, so the stale target dir would survive the swap
-    // and the moved key would exist in both old and new partitions.
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    touchedVals.iterator
-      .map {
-        case Some(v) => s"$partitionCol=${ExternalCatalogUtils.escapePathName(v)}"
-        case None    => s"$partitionCol=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-      }
-      .filterNot(stagingNames.contains)
-      .foreach { name =>
-        val stale = new Path(targetDir, name)
-        if (fs.exists(stale)) fs.delete(stale, true)
-      }
   }
 }

@@ -7,11 +7,11 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.sources.CommitMarker
 
-/** Snapshot-isolated MERGE store over plain parquet — the manifest log
-  * that closes the torn-reader window [[Merge.upsertIntoParquet]]
-  * documents as its residual scope (reference: delta-lake/delta_setup.py
-  * gets this from Delta's transaction log; this is the same protocol on
-  * partition granularity, with no Delta jar in the environment).
+/** Snapshot-isolated MERGE store over plain parquet — the one writer of
+  * every keyed MERGE store in the engine (reference:
+  * delta-lake/delta_setup.py gets this from Delta's transaction log;
+  * this is the same protocol on partition granularity, with no Delta jar
+  * in the environment).
   *
   * Layout (all control files `_`-prefixed, invisible to Spark scans):
   *
@@ -25,8 +25,7 @@ import graft.sources.CommitMarker
   *
   * Why this shape and not a full-copy snapshot per commit (fine for
   * small marts, fatal at 100 TB): this store re-writes only the
-  * partitions a merge touches (like
-  * `Merge.upsertIntoParquet`) but publishes them as NEW `__e={epoch}`
+  * partitions a merge touches, publishes them as NEW `__e={epoch}`
   * subdirectories plus one atomically-renamed manifest, never deleting a
   * file any committed snapshot references. Readers therefore get:
   *
@@ -34,8 +33,7 @@ import graft.sources.CommitMarker
   *    PLAN time and pins exactly its files; a concurrent MERGE publishing
   *    epoch N+1 adds new directories and a new manifest but touches
   *    nothing epoch N references, so in-flight reads never see a torn
-  *    mix of old and new partitions (the failure mode the swap-based
-  *    store accepts and documents).
+  *    mix of old and new partitions.
   *  - '''Time travel''': `read(asOf = Some(e))` for any epoch still
   *    inside the vacuum retention, on the partitioned store rather than
   *    on full-copy snapshots.
@@ -62,13 +60,12 @@ import graft.sources.CommitMarker
   * read. Reads hand Spark the explicit partition-version directories
   * with `basePath`, so the partition column stays a partition column:
   * partition pruning and pushed filters behave exactly as on the plain
-  * layout. MERGE cost is unchanged from `upsertIntoParquet` (one
-  * left-anti shuffle + touched-partition rewrite); publish adds one
-  * rename per touched partition and one manifest write.
+  * layout. A MERGE costs one left-anti shuffle plus the rewrite of the
+  * touched partitions; publish adds one rename per touched partition and
+  * one manifest write.
   *
   * Contract: single logical schema per store (the manifest carries it;
-  * sources must present every store column — same contract as the swap
-  * store). Vacuumed epochs stop being time-travelable; a reader pinned
+  * sources must present every store column). Vacuumed epochs stop being time-travelable; a reader pinned
   * to a snapshot older than the retention can lose files mid-read —
   * Delta's VACUUM makes the identical trade.
   */
@@ -300,7 +297,7 @@ object SnapshotMerge {
     requirePathStablePartitionType(
       source.schema(partitionCol).dataType, partitionCol)
     // physical-version floor read BEFORE the manifest (the protocol
-    // order Merge.upsertIntoParquet documents) — not load-bearing for
+    // order CommitMarker.claimEpochFrom documents) — not load-bearing for
     // the lost-update guarantee (the manifest create-exclusive below
     // is), but it keeps physical numbers monotone past in-flight claims
     val claimFloor = CommitMarker.currentEpoch(spark, store)
@@ -383,8 +380,8 @@ object SnapshotMerge {
     val kept = keySet.map(ks => affected.join(ks, keys, "left_anti"))
       .getOrElse(affected)
     val merged = Merge.upsert(kept, source, keys)
-    // partition METADATA (one value per touched partition), collected
-    // before any publish step — same bound as Merge.upsertIntoParquet
+    // partition METADATA (one value per touched partition, never data),
+    // collected before any publish step
     val touchedVals = touched.collect().map(r => Option(r.get(0)).map(_.toString))
     // EMPTY batch against an existing store: nothing to stage — return
     // the current epoch instead of burning one (a recovery replay of a
@@ -612,7 +609,7 @@ object SnapshotMerge {
     }
     // staging cleanup only AFTER the commit: a cleanup hiccup must not
     // abort a completed publish (an orphan staging dir is an inert
-    // sibling no reader lists — Merge.scala documents the same)
+    // sibling no reader lists)
     try fs.delete(stagingPath, true) catch { case _: Throwable => () }
     next
   }
@@ -635,9 +632,8 @@ object SnapshotMerge {
     }.select(schema.fields.map(f => col(f.name)).toIndexedSeq: _*)
 
   /** Partition dir names are derived from collected values via
-    * `toString` (the same approach as [[Merge.upsertIntoParquet]]), so
-    * the partition column must be a type whose string form round-trips
-    * Spark's partition-path formatting exactly. Timestamps (session-
+    * `toString`, so the partition column must be a type whose string
+    * form round-trips Spark's partition-path formatting exactly. Timestamps (session-
     * timezone formatted, sub-second suffix), floating point (scientific
     * notation), decimals, and binary do NOT — a mismatch would leave a
     * moved-out partition's stale manifest entry serving its rows twice.

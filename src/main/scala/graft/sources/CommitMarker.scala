@@ -2,89 +2,20 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-stamped commit marker for keyed parquet stores that are
-  * bootstrapped once (Overwrite) and then maintained by MERGE — the
-  * replay guard every foreachBatch upsert sink needs (reference:
-  * delta-lake/delta_setup.py's MERGE tables rely on Delta's log for
-  * this; plain parquet stores carry their own marker instead).
-  *
-  * Two object-store traps this closes (r13 verdict/ADVICE lineage):
-  *  - a `java.io.File` probe silently answers "missing" for any
-  *    non-local filesystem, so every restart would re-take the
-  *    first-write Overwrite branch and wipe merged state — the probe
-  *    must go through the Hadoop `FileSystem` resolved from the path's
-  *    OWN scheme;
-  *  - gating on `_SUCCESS` alone couples the guard to the committer's
-  *    configuration: under
-  *    `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` (a
-  *    standard object-store tuning) no `_SUCCESS` ever lands and the
-  *    same wipe happens. The engine's own marker — written strictly
-  *    AFTER the bootstrap write returns — is committer-independent.
-  *
-  * A half-written bootstrap has NEITHER file, so its retry re-runs the
-  * same Overwrite (idempotent); MERGE maintenance rewrites day
-  * partitions, never the store root, so the root marker survives.
-  *
-  * MIGRATION BOUNDARY (one-time, r14 review): a store committed by a
-  * PRE-marker version of this engine under
-  * `marksuccessfuljobs=false` has neither file and is, by
-  * construction, indistinguishable from a half-written bootstrap — the
-  * next batch would re-run the Overwrite over its merged state. Any
-  * heuristic "adopt" (e.g. treating a non-empty dir as committed)
-  * recreates exactly the replay bug this marker closes, so the engine
-  * refuses to guess: adopting such a store is the operator's explicit
-  * one-line step — call [[mark]] on the store root (or touch
-  * `_GRAFT_COMMITTED` there) before resuming the stream. Stores whose
-  * committer writes `_SUCCESS` need nothing. */
+/** The epoch-claim protocol of keyed parquet stores: `_GRAFT_EPOCH_{n}`
+  * files in the store root, claimed by an atomic create-exclusive.
+  * [[graft.etl.SnapshotMerge]] uses a claim to hand every publish a
+  * UNIQUE physical `__e={n}` version-directory number; its manifest
+  * rename, not the claim, is the commit point. */
 object CommitMarker {
 
-  private val MarkerFile = "_GRAFT_COMMITTED"
   private val EpochPrefix = "_GRAFT_EPOCH_"
 
-  /** Runtime conf key: `true` makes the streaming mergeSink FAIL (rather
-    * than warn) when its bootstrap branch meets a NON-EMPTY directory
-    * that carries no commit marker — see [[unmarkedNonEmpty]]. */
-  val FailOnUnmarkedKey = "graft.merge.failOnUnmarkedNonEmpty"
-
   /** A second writer raced this one to the store's next epoch — its
-    * MERGE aborted BEFORE touching any partition. The store holds the
-    * winner's merge; rerun to apply this writer's changes on top. */
+    * publish aborted before any committed state changed. Rerun to
+    * apply its changes on top of the winner's. */
   final class ConcurrentWriteException(msg: String)
     extends RuntimeException(msg)
-
-  /** Store readiness: `_SUCCESS` (when the committer writes one) OR the
-    * engine's own marker, probed through the path's own FileSystem. */
-  def committed(spark: SparkSession, store: String): Boolean = {
-    val conf = spark.sessionState.newHadoopConf()
-    Seq("_SUCCESS", MarkerFile).exists { m =>
-      val p = new org.apache.hadoop.fs.Path(store, m)
-      p.getFileSystem(conf).exists(p)
-    }
-  }
-
-  /** Stamp the engine's marker — call strictly after the bootstrap
-    * write returns. */
-  def mark(spark: SparkSession, store: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(store, MarkerFile)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true).close()
-  }
-
-  /** Bootstrap-overwrite guard (r14 ADVICE): a directory that is
-    * NON-EMPTY yet carries neither `_SUCCESS` nor the engine marker is
-    * ambiguous — either a half-written bootstrap (whose retry SHOULD
-    * overwrite) or a pre-marker merged store under
-    * `marksuccessfuljobs=false` (whose overwrite DESTROYS merged
-    * state). The engine cannot tell them apart, so the caller must
-    * surface the ambiguity before taking the destructive branch:
-    * loudly by default, fatally under [[FailOnUnmarkedKey]]. The
-    * one-line adoption step for a known-good store is `mark(store)`
-    * (touch `_GRAFT_COMMITTED`). */
-  def unmarkedNonEmpty(spark: SparkSession, store: String): Boolean = {
-    if (committed(spark, store)) return false
-    val p = new org.apache.hadoop.fs.Path(store)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
 
   /** Parsed epoch numbers of the store's `_GRAFT_EPOCH_*` files.
     * Foreign files sharing the prefix (a tool's `.bak`, a mid-copy
@@ -105,37 +36,21 @@ object CommitMarker {
     epochsOf(fs, p).foldLeft(0L)(math.max)
   }
 
-  /** OPTIMISTIC-CONCURRENCY claim of the store's next epoch (r14
-    * verdict #5 — the one lakehouse semantic still narrower than
-    * Delta's). Protocol, mirroring Delta's log commit on plain files:
-    * a writer reads [[currentEpoch]] as `base` BEFORE reading the
-    * table, stages its merge, and calls this with that base just
-    * before publishing — the atomic `create(overwrite = false)` of
+  /** Claim epoch `base + 1`, where `base` is a [[currentEpoch]] the
+    * caller read earlier: the atomic `create(overwrite = false)` of
     * `_GRAFT_EPOCH_{base+1}` is the same create-exclusive primitive
-    * Delta's protocol rides. If ANY other writer committed after this
-    * one's base read, the file exists and the claim throws
-    * [[ConcurrentWriteException]] BEFORE any partition is touched —
-    * a merge computed against a stale table can never publish (silent
-    * last-writer-wins becomes detect-and-fail). Serial writers each
-    * claim the next epoch and all succeed; a writer that crashes after
-    * claiming leaves only a stale epoch file, and its retry claims the
-    * next epoch and re-applies the idempotent merge.
-    *
-    * Residual window, documented scope: the publish itself (per-
-    * partition directory renames) is not atomic, so a writer whose
-    * base read lands MID-publish of the winner sees a torn table yet a
-    * fresh epoch — the same non-atomic-swap exposure the store always
-    * had for readers. Closing it takes an atomic log (Delta); the
-    * epoch claim closes the whole compute-while-stale class above it.
+    * Delta's log commit rides. If any other writer claimed that number
+    * after the base read, the file exists and the claim throws
+    * [[ConcurrentWriteException]]. A writer that crashes after claiming
+    * leaves only a stale epoch file; the next claim moves past it.
     *
     * FILESYSTEM SCOPE: the guarantee is exactly as strong as
     * `create(overwrite = false)` exclusivity — atomic on HDFS, local,
     * ABFS; NOT on raw S3A, whose create is a HEAD-then-PUT race (the
     * reason Delta needs an external LogStore on S3). On such stores
-    * the claim still detects every non-simultaneous conflict and is a
-    * strict improvement over no detection, but two truly simultaneous
-    * claimants can both win — deploy an S3 store behind a consistent
-    * committer/coordination layer if that matters.
+    * the claim still detects every non-simultaneous conflict, but two
+    * truly simultaneous claimants can both win — deploy an S3 store
+    * behind a consistent committer/coordination layer if that matters.
     *
     * The winner prunes epoch files older than its base via ONE
     * directory listing (bounded metadata, never data — and never

@@ -303,14 +303,13 @@ object PartitionedLayout {
         .write.mode(SaveMode.Overwrite).parquet(out)
       out
     })
-    weeklySketchContract(spark, sfDir, dir)
+    weeklySketchContract(spark, sfDir, spark.read.parquet(dir))
   }
 
-  /** q96's registered surface over ANY per-day sketch table at
-    * `sketchDir` — shared by the batch-built path (q96) and the
-    * stream-maintained one (q102): exact weekly distinct recomputed
-    * from the fact table, `approx_ok` = the merged stored sketches
-    * within ±10%. */
+  /** q96's registered surface over ANY per-day sketch table — shared
+    * by the batch-built path (q96) and the stream-maintained one
+    * (q102): exact weekly distinct recomputed from the fact table,
+    * `approx_ok` = the merged stored sketches within ±10%. */
   // The q96/q102/q103/q104 analysis window and week formula, defined
   // ONCE on the Scala side (the q96Sql/q103Sql oracle strings state the
   // same constants in DuckDB dialect — changing the window means
@@ -321,8 +320,8 @@ object PartitionedLayout {
     floor(datediff(day, to_date(lit("2024-01-01"))) / 7).cast("long")
 
   private[graft] def weeklySketchContract(spark: SparkSession, sfDir: String,
-                                          sketchDir: String): DataFrame = {
-    val approx = mergedWeeklyEstimates(spark, sketchDir)
+                                          sketches: DataFrame): DataFrame = {
+    val approx = mergedWeeklyEstimates(sketches)
     val exact = graft.Tables.events(spark, sfDir)
       .withColumn("day", to_date(col("ts")))
       .filter(col("day").between(winLo, winHi))
@@ -339,8 +338,8 @@ object PartitionedLayout {
     * table — split out so PlanSpec can assert storage-round-trip
     * associativity (merged == direct, exactly) against the values the
     * registered surface reduces to `approx_ok`. */
-  private[graft] def mergedWeeklyEstimates(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+  private[graft] def mergedWeeklyEstimates(sketches: DataFrame): DataFrame =
+    sketches
       .filter(col("day").between(winLo, winHi))
       .groupBy(weekOf(col("day")).as("week"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("approx_wau"))
@@ -391,14 +390,14 @@ object PartitionedLayout {
         .write.mode(SaveMode.Overwrite).parquet(out)
       out
     })
-    weeklyQuantilesFromStore(spark, dir)
+    weeklyQuantilesFromStore(spark.read.parquet(dir))
   }
 
   /** The registered weekly-quantile surface over ANY (day, bucket, cnt)
     * histogram store — the merge is `sum(cnt)` by (week, bucket). */
-  private[graft] def weeklyQuantilesFromStore(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def weeklyQuantilesFromStore(hist: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val weekly = spark.read.parquet(dir)
+    val weekly = hist
       .filter(col("day").between(winLo, winHi))
       .groupBy(weekOf(col("day")).as("week"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))

@@ -942,40 +942,12 @@ object StreamingOracle {
 
   // ---- q102 + q104: consolidated store-maintenance stream -----------------
 
-  /** The maintenance stores' OWN commit marker, written by
-    * [[markStoreCommitted]] after a successful first-write Overwrite.
-    * Gating on `_SUCCESS` alone would couple the replay guard to the
-    * committer's configuration: under
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` (a
-    * standard object-store tuning) no `_SUCCESS` ever lands, so every
-    * later trigger would re-take the first-write branch and Overwrite
-    * the merged store down to its own partials. */
-  /** Store readiness — `_SUCCESS` (when the committer writes one) OR
-    * the engine's own marker — through the Hadoop FileSystem API: the
-    * maintenance stores' replay guards are production-posture features,
-    * and at 100 TB the store is an object store a `java.io.File` probe
-    * silently reports as "missing" — every restart would then re-run
-    * the first-write Overwrite over merged state. Round 14: the
-    * mechanism moved to [[graft.sources.CommitMarker]] so
-    * [[Streams.mergeSink]] shares the exact same guard (r13 verdict
-    * #2 — the sink still probed with `java.io.File`). */
-  private[graft] def storeCommitted(spark: SparkSession, store: String): Boolean =
-    graft.sources.CommitMarker.committed(spark, store)
-
-  /** Stamp the engine's own commit marker (committer-independent).
-    * Called after the first-write Overwrite — the merge branch never
-    * needs it (it only runs once committed, and
-    * [[graft.etl.Merge.upsertIntoParquet]] rewrites day partitions, not
-    * the store root, so the root marker survives). */
-  private[graft] def markStoreCommitted(spark: SparkSession, store: String): Unit =
-    graft.sources.CommitMarker.mark(spark, store)
-
   /** ONE stream maintains BOTH maintenance stores — q102's per-day HLL
     * sketch table and q104's per-day quantile histogram — with a single
     * `foreachBatch` applying both merges per trigger. The two gates
     * previously ran the identical scaffold (bounded file stream over
-    * the partitioned-events layout → foreachBatch → S7 partition-pruned
-    * MERGE → store contract) twice, and the streaming block's cost is
+    * the partitioned-events layout → foreachBatch → snapshot MERGE →
+    * store contract) twice, and the streaming block's cost is
     * ~linear in trigger count (~0.48 s start + ~0.25 s/trigger commit
     * bookkeeping), so the duplicate stream was pure commit-protocol
     * floor: consolidating halves the maintenance triggers without
@@ -1025,9 +997,8 @@ object StreamingOracle {
     * day's row merges via `hll_union_agg` (HLL union keeps the
     * per-register max, so union-of-partials ≡ one sketch over all
     * values, whatever the micro-batch slicing), a new day inserts. The
-    * upsert is the S7 partition-pruned MERGE
-    * ([[graft.etl.Merge.upsertIntoParquet]]): a batch touching k days
-    * rewrites k day-partitions, never the table — at 100 TB each
+    * upsert is a [[graft.etl.SnapshotMerge]] commit: a batch touching k
+    * days rewrites k day-partitions, never the table — at 100 TB each
     * trigger's write cost tracks the trigger's data, which is the whole
     * point of maintaining the sketch store incrementally. The
     * registered surface answers q96's exact weekly question FROM THE
@@ -1041,34 +1012,35 @@ object StreamingOracle {
   def streamingSketchMaintain(spark: SparkSession, sfDir: String): DataFrame = {
     val store = maintainedStores(spark, sfDir)._1
     lastSketchStoreDir = Some(store)
-    graft.sources.PartitionedLayout.weeklySketchContract(spark, sfDir, store)
+    graft.sources.PartitionedLayout.weeklySketchContract(spark, sfDir,
+      graft.etl.SnapshotMerge.read(spark, store))
   }
+
+  /** The store's committed rows, or None before its first commit. The
+    * tip probe ignores anything a crashed trigger left behind: files
+    * outside a manifest are never read. */
+  private def committedStore(sp: SparkSession, store: String): Option[DataFrame] =
+    graft.etl.SnapshotMerge.tipEpoch(sp, store)
+      .map(e => graft.etl.SnapshotMerge.read(sp, store, Some(e)))
 
   /** One q102 trigger's merge. Replay-safe end to end: the HLL union is
     * a per-register MAX — idempotent — so a replayed batch's partials
-    * re-land the same registers; the one replay hazard is the FIRST
-    * write, gated on the `_SUCCESS` marker (a bare directory probe
-    * would treat a half-written batch 0 as a store and merge into
-    * partial data) with the retry running the same Overwrite. */
+    * re-land the same registers, and a crashed first trigger leaves no
+    * manifest, so its retry bootstraps the store from scratch. */
   private[graft] def mergeSketchBatch(batch: DataFrame, store: String): Unit = {
     val sp = batch.sparkSession
     val batchSketches = batch.groupBy("day")
       .agg(hll_sketch_agg(col("user_id")).as("sketch"))
-    if (!storeCommitted(sp, store)) {
-      batchSketches.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("day").parquet(store)
-      markStoreCommitted(sp, store)
-    } else {
-      // pre-merge the touched days' stored sketches with the
-      // batch partials, then MERGE by day: upsert replaces
-      // matched day rows with the unioned sketch
-      val existingTouched = sp.read.parquet(store)
-        .join(batchSketches.select("day").distinct(), Seq("day"), "left_semi")
-      val merged = existingTouched.select(col("day"), col("sketch"))
+    // pre-merge the touched days' stored sketches with the batch
+    // partials, then MERGE by day: upsert replaces matched day rows
+    // with the unioned sketch
+    val merged = committedStore(sp, store).fold(batchSketches) { stored =>
+      stored.join(batchSketches.select("day").distinct(), Seq("day"), "left_semi")
+        .select(col("day"), col("sketch"))
         .unionByName(batchSketches)
         .groupBy("day").agg(hll_union_agg(col("sketch")).as("sketch"))
-      graft.etl.Merge.upsertIntoParquet(sp, store, merged, Seq("day"), "day")
     }
+    graft.etl.SnapshotMerge.upsert(sp, store, merged, Seq("day"), "day")
   }
 
   // ---- q104: streaming quantile-histogram maintenance ---------------------
@@ -1081,9 +1053,9 @@ object StreamingOracle {
     * maintenance family (one shared stream with q102 — see
     * [[maintainedStores]]): each trigger's `foreachBatch` computes the
     * BATCH's per-day partial histograms (count per (day, bucket) over
-    * just the batch rows) and MERGEs them into the stored parquet table
-    * by day — existing days sum counts elementwise, new days insert —
-    * through the S7 partition-pruned MERGE. Where q102's stream≡batch
+    * just the batch rows) and MERGEs them into the stored table by day
+    * — existing days sum counts elementwise, new days insert — through
+    * a [[graft.etl.SnapshotMerge]] commit. Where q102's stream≡batch
     * claim is estimate-for-estimate (HLL register max), here the merge
     * is EXACT integer addition, so the stream-maintained store equals
     * the batch build row for row under any slicing, and the registered
@@ -1092,7 +1064,8 @@ object StreamingOracle {
   def streamingHistogramMaintain(spark: SparkSession, sfDir: String): DataFrame = {
     val store = maintainedStores(spark, sfDir)._2
     lastHistStoreDir = Some(store)
-    graft.sources.PartitionedLayout.weeklyQuantilesFromStore(spark, store)
+    graft.sources.PartitionedLayout.weeklyQuantilesFromStore(
+      graft.etl.SnapshotMerge.read(spark, store))
   }
 
   /** One q104 trigger's merge, REPLAY-IDEMPOTENT via the documented
@@ -1103,10 +1076,9 @@ object StreamingOracle {
     * unlike q102's HLL register-max, re-adding a replayed batch's
     * partials would double-count — so the guard is load-bearing, and
     * PlanSpec replays a batch through this method to pin the store
-    * byte-identical. The first write goes through Overwrite with the
-    * `_SUCCESS` marker as the completion test, so a partially-failed
-    * batch 0 re-runs the same overwrite instead of merging into
-    * half-written data. */
+    * byte-identical. A crashed first trigger leaves no manifest, so its
+    * retry bootstraps the store instead of merging into half-written
+    * data. */
   private[graft] def mergeHistogramBatch(batch: DataFrame, batchId: Long,
                                          store: String): Unit = {
     val sp = batch.sparkSession
@@ -1117,43 +1089,40 @@ object StreamingOracle {
       .withColumn("src_batch", lit(batchId))
       .persist()
     try {
-      if (!storeCommitted(sp, store)) {
-        batchHist.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("day").parquet(store)
-        markStoreCommitted(sp, store)
-      } else {
-        val stored = sp.read.parquet(store)
-        // days this batch has NOT yet merged: touched days minus those
-        // whose stored txn version already carries this batch id. Both
-        // lists are bounded METADATA (≤ the batch's distinct days — the
-        // same sanctioned class as Merge's touched-partition collect);
-        // materializing them as literals keeps the merge plan flat —
-        // the first cut threaded these sets through joins, and every
-        // action inside the upsert re-evaluated that tree with its
-        // full-store scans (~2 s/trigger, bench-measured). As literals,
-        // `day isin (...)` prunes the store read to the touched
-        // day-partitions — the read-side twin of the partition-pruned
-        // rewrite.
-        val touchedDays = batchHist.select("day").distinct()
-          .collect().map(_.getDate(0)).toSeq
-        val applied = stored
-          .filter(col("day").isin(touchedDays: _*))
+      // days this batch has NOT yet merged: touched days minus those
+      // whose stored txn version already carries this batch id. Both
+      // lists are bounded METADATA (≤ the batch's distinct days — the
+      // same sanctioned class as SnapshotMerge's touched-partition
+      // collect); materializing them as literals keeps the merge plan
+      // flat — the first cut threaded these sets through joins, and
+      // every action inside the upsert re-evaluated that tree with its
+      // full-store scans (~2 s/trigger, bench-measured). As literals,
+      // `day isin (...)` prunes the store read to the touched
+      // day-partitions — the read-side twin of the partition-pruned
+      // rewrite.
+      val stored = committedStore(sp, store)
+      val touchedDays = batchHist.select("day").distinct()
+        .collect().map(_.getDate(0)).toSeq
+      val applied = stored.fold(Set.empty[java.sql.Date]) { st =>
+        st.filter(col("day").isin(touchedDays: _*))
           .groupBy("day").agg(max(col("src_batch")).as("mx"))
           .filter(col("mx") >= batchId)
           .select("day").collect().map(_.getDate(0)).toSet
-        val unapplied = touchedDays.filterNot(applied)
-        if (unapplied.nonEmpty) {
-          val dayIn = col("day").isin(unapplied: _*)
-          // pre-merge the unapplied days' stored rows with the batch
-          // partials (elementwise count addition), then MERGE by day: a
-          // trigger touching k days rewrites k day-partitions
-          val merged = stored.filter(dayIn)
+      }
+      val unapplied = touchedDays.filterNot(applied)
+      if (unapplied.nonEmpty) {
+        val dayIn = col("day").isin(unapplied: _*)
+        // pre-merge the unapplied days' stored rows with the batch
+        // partials (elementwise count addition), then MERGE by day: a
+        // trigger touching k days rewrites k day-partitions
+        val merged = stored.fold(batchHist) { st =>
+          st.filter(dayIn)
             .select(col("day"), col("bucket"), col("cnt"), col("src_batch"))
             .unionByName(batchHist.filter(dayIn))
             .groupBy("day", "bucket")
             .agg(sum(col("cnt")).as("cnt"), max(col("src_batch")).as("src_batch"))
-          graft.etl.Merge.upsertIntoParquet(sp, store, merged, Seq("day"), "day")
         }
+        graft.etl.SnapshotMerge.upsert(sp, store, merged, Seq("day"), "day")
       }
     } finally { batchHist.unpersist(); () }
   }

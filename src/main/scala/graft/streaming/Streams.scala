@@ -164,77 +164,21 @@ object Streams {
         col("v.event_id").as("view_id"), col("c.event_id").as("click_id"),
         col("v.ts").as("view_ts"), col("c.ts").as("click_ts"))
 
-  /** foreachBatch MERGE sink — the streaming upsert into a keyed parquet
-    * table (the lakehouse "streaming MERGE INTO"): each micro-batch is
-    * first deduped to one row per key (last writer within the batch
-    * wins, by the event-time column) and then upserted through the
-    * partition-pruned batch merge. Re-running a batch after a crash
-    * re-applies the same upsert — idempotent per key, which is what
-    * makes foreachBatch exactly-once-per-key under at-least-once
-    * delivery. The first batch bootstraps the table.
+  /** foreachBatch MERGE sink — the streaming upsert into a keyed
+    * [[graft.etl.SnapshotMerge]] store (the lakehouse "streaming MERGE
+    * INTO"): each micro-batch is first deduped to one row per key (last
+    * writer within the batch wins, by the event-time column) and then
+    * upserted as one manifest epoch, so downstream readers always see a
+    * complete snapshot and can time-travel the stream's history up to
+    * the vacuum retention.
     *
-    * Bootstrap-vs-merge is decided by [[graft.sources.CommitMarker]]
-    * (round 14, r13 verdict #2): the previous `java.io.File` probe
-    * silently answers "missing" on any non-local filesystem, so a
-    * restart against an object store would re-Overwrite merged state;
-    * the marker — stamped strictly after the bootstrap write — answers
-    * through the path's own FileSystem and is committer-independent
-    * (no `_SUCCESS` required). A half-written bootstrap has no marker,
-    * so its retry re-runs the same Overwrite. */
-  def mergeSink(stream: DataFrame, targetDir: String, checkpoint: String,
-                keys: Seq[String], tsCol: String,
-                partitionCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val latest = graft.etl.Dedup.keepLatest(batch, keys, Seq(col(tsCol)))
-        if (!graft.sources.CommitMarker.committed(spark, targetDir)) {
-          // AMBIGUOUS TARGET guard (r14 ADVICE): a non-empty dir with no
-          // marker is EITHER a half-written bootstrap (retry should
-          // overwrite) or a pre-marker merged store under
-          // marksuccessfuljobs=false (overwrite destroys data). Surface
-          // it before the destructive branch: fail under the strict
-          // conf, else warn loudly with the one-line adoption step.
-          if (graft.sources.CommitMarker.unmarkedNonEmpty(spark, targetDir)) {
-            val msg = s"mergeSink bootstrap: $targetDir is non-empty but " +
-              "carries no _SUCCESS/_GRAFT_COMMITTED marker — if it is a " +
-              "merged store from a pre-marker engine (committer tuned with " +
-              "marksuccessfuljobs=false), STOP and adopt it by touching " +
-              "_GRAFT_COMMITTED (CommitMarker.mark) before resuming; if it " +
-              "is a half-written bootstrap this Overwrite is the correct " +
-              s"retry. Set ${graft.sources.CommitMarker.FailOnUnmarkedKey}" +
-              "=true to make this fatal."
-            if (spark.conf.getOption(graft.sources.CommitMarker.FailOnUnmarkedKey)
-                .exists(_.toBoolean))
-              throw new IllegalStateException(msg)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-          }
-          latest.write.partitionBy(partitionCol).mode("overwrite").parquet(targetDir)
-          graft.sources.CommitMarker.mark(spark, targetDir)
-        } else
-          graft.etl.Merge.upsertIntoParquet(
-            spark, targetDir, latest, keys, partitionCol)
-      }
-
-  /** foreachBatch MERGE sink over the SNAPSHOT store
-    * ([[graft.etl.SnapshotMerge]]) — the streaming upsert with
-    * Delta-parity read semantics: each trigger commits one manifest
-    * epoch, so downstream readers always see a complete snapshot (never
-    * the mid-publish torn view the swap store exposes) and can
-    * time-travel the stream's history up to the vacuum retention.
-    *
-    * The entire bootstrap-ambiguity class [[mergeSink]] has to guard
-    * (half-written Overwrite vs pre-marker merged store, the
-    * `_SUCCESS`-vs-marker committer coupling, the strict-fail conf)
-    * does not exist here: there is no first-write Overwrite branch at
-    * all. The manifest is the single commit authority — an empty store
+    * The manifest is the single commit authority: an empty store
     * bootstraps through the same MERGE path, and a half-written first
-    * epoch is simply an uncommitted manifest no reader or later writer
-    * ever consults. Replay stays idempotent per key: a re-run batch
+    * epoch is an uncommitted manifest no reader or later writer ever
+    * consults. Replay stays idempotent per key: a re-run batch
     * re-upserts the same deduped rows, landing a new epoch with
-    * identical logical content.
+    * identical logical content — which is what makes foreachBatch
+    * exactly-once-per-key under at-least-once delivery.
     *
     * `vacuumKeep` bounds the history a LONG-RUNNING stream accrues: one
     * epoch per trigger means manifests and superseded partition

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.CoreQueries
 
@@ -446,7 +447,8 @@ class PlanSpec extends SparkSuite {
     // the merged path's RAW estimates over the persisted table — must
     // EQUAL the direct estimates, not merely approximate them
     val merged = graft.sources.PartitionedLayout
-      .mergedWeeklyEstimates(spark, graft.sources.PartitionedLayout.sketchTableDir(sf))
+      .mergedWeeklyEstimates(
+        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(sf)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(merged === direct,
       s"storage round-trip + union must be the identity on HLL state: $merged vs $direct")
@@ -507,11 +509,12 @@ class PlanSpec extends SparkSuite {
     // (day, bucket, cnt) set to the batch build under any slicing
     graft.streaming.StreamingOracle.streamingHistogramMaintain(spark, sf).collect()
     graft.sources.PartitionedLayout.quantileHistogramRollup(spark, sf).collect()
-    def rowsOf(dir: String) = spark.read.parquet(dir)
+    def rowsOf(store: DataFrame) = store
       .select(col("day").cast("string"), col("bucket"), col("cnt"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val streamed = rowsOf(graft.streaming.StreamingOracle.lastHistStoreDir.get)
-    val batch = rowsOf(graft.sources.PartitionedLayout.histStoreDir(sf))
+    val streamed = rowsOf(graft.etl.SnapshotMerge.read(spark,
+      graft.streaming.StreamingOracle.lastHistStoreDir.get))
+    val batch = rowsOf(spark.read.parquet(graft.sources.PartitionedLayout.histStoreDir(sf)))
     assert(streamed === batch,
       s"exact-addition merge must land on the identical store: ${
         (streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
@@ -532,7 +535,7 @@ class PlanSpec extends SparkSuite {
     val b1 = ev.filter(col("event_id") % 2 === 1).drop("event_id")
     graft.streaming.StreamingOracle.mergeHistogramBatch(b0, 0L, dir)
     graft.streaming.StreamingOracle.mergeHistogramBatch(b1, 1L, dir)
-    def snap() = spark.read.parquet(dir)
+    def snap() = graft.etl.SnapshotMerge.read(spark, dir)
       .select(col("day").cast("string"), col("bucket"), col("cnt"), col("src_batch"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val before = snap()
@@ -550,58 +553,53 @@ class PlanSpec extends SparkSuite {
     assert(before.map(t => (t._1, t._2, t._3)) === direct)
   }
 
-  test("q102 first write is replay-safe: a half-written batch 0 re-runs the Overwrite, not a merge") {
-    // the ADVICE r12 scenario: trigger 0 fails after creating the store
-    // directory but before the commit marker. A bare directory probe
-    // would take the merge branch and read the partial store; the
-    // _SUCCESS gate must instead re-run the first-write Overwrite, and
-    // a replay AFTER a committed batch must merge idempotently (HLL
-    // union is a per-register max).
-    val dir = java.nio.file.Files.createTempDirectory("q102_replay").toString + "/store"
+  private def q102Batches = {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), to_date(col("ts")).as("day"), col("user_id"))
-    val b0 = ev.filter(col("event_id") % 2 === 0).drop("event_id")
-    // simulate the partial first trigger: directory present, junk file
-    // inside, NO _SUCCESS marker
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    (ev, ev.filter(col("event_id") % 2 === 0).drop("event_id"),
+      ev.filter(col("event_id") % 2 === 1).drop("event_id"))
+  }
+
+  private def sketchEstimates(store: DataFrame) = store
+    .select(col("day").cast("string"), hll_sketch_estimate(col("sketch")))
+    .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+
+  private def directEstimates(rows: DataFrame) = rows
+    .groupBy(col("day")).agg(hll_sketch_agg(col("user_id")).as("sk"))
+    .select(col("day").cast("string"), hll_sketch_estimate(col("sk")))
+    .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+
+  test("q102 first write is replay-safe: a crashed batch 0's files are ignored") {
+    // trigger 0 died mid-write: the store directory holds a readable
+    // partition file and a torn one, but no manifest. The retry must
+    // bootstrap from its own rows alone, and a replay after the commit
+    // must merge idempotently (HLL union is a per-register max).
+    val dir = java.nio.file.Files.createTempDirectory("q102_replay").toString + "/store"
+    val (_, b0, _) = q102Batches
+    b0.limit(1).select(to_date(lit("1999-01-01")).as("day"),
+        hll_sketch_agg(col("user_id")).as("sketch"))
+      .write.partitionBy("day").parquet(dir)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-junk.parquet"),
       Array[Byte](1, 2, 3))
     graft.streaming.StreamingOracle.mergeSketchBatch(b0, dir) // the retry of batch 0
-    def snap() = spark.read.parquet(dir)
-      .select(col("day").cast("string"), hll_sketch_estimate(col("sketch")).as("est"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    def snap() = sketchEstimates(graft.etl.SnapshotMerge.read(spark, dir))
     val after = snap()
-    assert(after.nonEmpty, "the retried Overwrite must land a readable store")
-    // replaying the SAME batch against the now-committed store must be
-    // a no-op estimate-wise (register max absorbs the duplicate)
+    assert(after === directEstimates(b0),
+      "the first commit must hold exactly batch 0's sketches, no crashed-write rows")
     graft.streaming.StreamingOracle.mergeSketchBatch(b0, dir)
     assert(snap() === after, "re-merging a replayed batch must not move any estimate")
   }
 
-  test("store gate survives a committer that writes no _SUCCESS (marksuccessfuljobs=false posture)") {
-    // the object-store tuning the stores' design targets: the committer
-    // never writes _SUCCESS. Gating on _SUCCESS alone would make every
-    // later trigger re-take the first-write Overwrite and wipe merged
-    // state down to its own partials; the engine's own commit marker
-    // must keep the merge branch engaged.
-    val dir = java.nio.file.Files.createTempDirectory("q102_nosuccess").toString + "/store"
-    val ev = Tables.events(spark, sf)
-      .select(col("event_id"), to_date(col("ts")).as("day"), col("user_id"))
-    val b0 = ev.filter(col("event_id") % 2 === 0).drop("event_id")
-    val b1 = ev.filter(col("event_id") % 2 === 1).drop("event_id")
+  test("q102 store: the second batch merges into the first, it does not overwrite") {
+    val dir = java.nio.file.Files.createTempDirectory("q102_merge").toString + "/store"
+    val (ev, b0, b1) = q102Batches
     graft.streaming.StreamingOracle.mergeSketchBatch(b0, dir)
-    // simulate marksuccessfuljobs=false: remove the committer's marker
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-    graft.streaming.StreamingOracle.mergeSketchBatch(b1, dir) // MUST merge, not Overwrite
-    val merged = spark.read.parquet(dir)
-      .select(col("day").cast("string"), hll_sketch_estimate(col("sketch")).as("est"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val direct = ev.groupBy(to_date(col("day")).as("d"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      .select(col("d").cast("string"), hll_sketch_estimate(col("sk")))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    graft.streaming.StreamingOracle.mergeSketchBatch(b1, dir)
+    assert(graft.etl.SnapshotMerge.committedEpochs(spark, dir) === Seq(1L, 2L))
+    val merged = sketchEstimates(graft.etl.SnapshotMerge.read(spark, dir))
+    val direct = directEstimates(ev)
     assert(merged === direct,
-      s"without _SUCCESS the second batch must still MERGE (got $merged vs $direct)")
+      s"the second batch must MERGE into the first (got $merged vs $direct)")
   }
 
   test("q102: the STREAM-maintained sketch store equals the batch-built one, estimate for estimate") {
@@ -615,11 +613,12 @@ class PlanSpec extends SparkSuite {
       s"approx_ok must hold on the stream-maintained store: ${out.mkString}")
     graft.sources.PartitionedLayout.sketchTableRollup(spark, sf).collect()
     val streamed = graft.sources.PartitionedLayout
-      .mergedWeeklyEstimates(spark,
-        graft.streaming.StreamingOracle.lastSketchStoreDir.get)
+      .mergedWeeklyEstimates(graft.etl.SnapshotMerge.read(spark,
+        graft.streaming.StreamingOracle.lastSketchStoreDir.get))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.sources.PartitionedLayout
-      .mergedWeeklyEstimates(spark, graft.sources.PartitionedLayout.sketchTableDir(sf))
+      .mergedWeeklyEstimates(
+        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(sf)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed === batch,
       s"stream-maintained store must equal the batch build: $streamed vs $batch")

@@ -91,66 +91,6 @@ class EtlSpec extends SparkSuite {
     assert(out === Set((1L, 10.0), (2L, 0.0)))
   }
 
-  test("upsertIntoParquet rewrites only touched partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString + "/t"
-    Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0), (3L, "2024-01-02", 3.0))
-      .toDF("id", "day", "v")
-      .write.partitionBy("day").parquet(dir)
-    val before = new java.io.File(s"$dir/day=2024-01-02").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified()).toSeq
-    val source = Seq((2L, "2024-01-01", 20.0), (4L, "2024-01-01", 4.0))
-      .toDF("id", "day", "v")
-    Merge.upsertIntoParquet(spark, dir, source, Seq("id"), "day")
-    val after = spark.read.parquet(dir)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("v"))).toSet
-    assert(after === Set((1L, 1.0), (2L, 20.0), (3L, 3.0), (4L, 4.0)))
-    val untouched = new java.io.File(s"$dir/day=2024-01-02").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified()).toSeq
-    assert(untouched === before, "untouched partition files must not be rewritten")
-  }
-
-  test("upsertIntoParquet removes the old row when a key's partition value changes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_mv").toString + "/t"
-    Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0))
-      .toDF("id", "day", "v").write.partitionBy("day").parquet(dir)
-    // key 1 moves to a corrected date
-    val source = Seq((1L, "2024-01-02", 10.0)).toDF("id", "day", "v")
-    Merge.upsertIntoParquet(spark, dir, source, Seq("id"), "day")
-    // partition-type inference reads `day` back as DATE — compare as string
-    val rows = spark.read.parquet(dir)
-      .collect().map(r => (r.getAs[Long]("id"),
-        String.valueOf(r.getAs[Any]("day")), r.getAs[Double]("v"))).toSet
-    assert(rows === Set((1L, "2024-01-02", 10.0), (2L, "2024-01-01", 2.0)),
-      "the key must not exist in both its old and new partition")
-  }
-
-  test("upsertIntoParquet deletes a touched partition left empty by a key move") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_empty").toString + "/t"
-    // day=2024-01-01 holds ONLY the moving key: after the merge it must
-    // not survive as a stale dir still holding the key's old row
-    Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
-      .toDF("id", "day", "v").write.partitionBy("day").parquet(dir)
-    val source = Seq((1L, "2024-01-02", 10.0)).toDF("id", "day", "v")
-    Merge.upsertIntoParquet(spark, dir, source, Seq("id"), "day")
-    assert(!new java.io.File(s"$dir/day=2024-01-01").exists(),
-      "emptied partition dir must be removed")
-    val rows = spark.read.parquet(dir)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("v"))).toSet
-    assert(rows === Set((1L, 10.0), (2L, 2.0)))
-  }
-
-  test("upsertIntoParquet merges null-partition rows instead of dropping them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_null").toString + "/t"
-    Seq((1L, Some("2024-01-01"), 1.0), (2L, None, 2.0))
-      .toDF("id", "day", "v").write.partitionBy("day").parquet(dir)
-    val source = Seq((3L, None: Option[String], 3.0)).toDF("id", "day", "v")
-    Merge.upsertIntoParquet(spark, dir, source, Seq("id"), "day")
-    val rows = spark.read.parquet(dir)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("v"))).toSet
-    assert(rows === Set((1L, 1.0), (2L, 2.0), (3L, 3.0)),
-      "existing null-partition rows must survive a null-partition merge")
-  }
-
   // ---- P15/A7 incremental ----
 
   test("incremental read: empty target means full source; else strictly newer rows") {

@@ -77,8 +77,41 @@ class MedallionSpec extends SparkSuite {
     assert(m2.quarantined === 1)
     assert(m2.loaded === 2)
 
-    val loaded = spark.read.parquet(target)
+    val loaded = SnapshotMerge.read(spark, target)
     assert(loaded.count() === 4)
     assert(loaded.select("event_id").as[Long].collect().toSet === Set(1L, 2L, 4L, 5L))
+  }
+
+  private def etlEvents = Seq(
+    (1L, ts("2024-01-01 10:00:00"), 1L, "view", 1.0),
+    (2L, ts("2024-01-01 11:00:00"), 1L, "view", 2.0),
+    (3L, ts("2024-01-02 09:00:00"), 2L, "click", 3.0),
+    (4L, ts("2024-01-02 10:00:00"), 2L, "view", 4.0)
+  ).toDF("event_id", "ts", "user_id", "event_type", "value")
+
+  test("EtlJob.run after a crashed first load still loads every valid row") {
+    // the first load died during job commit and left the later day's
+    // part files under the target with no commit; its watermark would
+    // be 2024-01-02 10:00 and the earlier day would never load
+    val target = java.nio.file.Files.createTempDirectory("graft_etlcrash").toString + "/target"
+    def addDay(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("day", to_date($"ts").cast("string"))
+    addDay(etlEvents.filter($"event_id" >= 3L)).write.partitionBy("day").parquet(target)
+    val m = EtlJob.run(spark, etlEvents, target, "ts", Seq("event_id"), Seq.empty,
+      addDay, "day")
+    assert(m.extracted === 4 && m.loaded === 4)
+    val loaded = SnapshotMerge.read(spark, target)
+    assert(loaded.select("event_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("EtlJob.run unpersists every cached frame when the load throws") {
+    val target = java.nio.file.Files.createTempDirectory("graft_etlleak").toString + "/target"
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // a timestamp partition column is refused before anything is staged
+    intercept[IllegalArgumentException] {
+      EtlJob.run(spark, etlEvents, target, "ts", Seq("event_id"), Seq.empty,
+        identity, "ts")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 }

@@ -5,10 +5,9 @@ import graft.sources.CommitMarker
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The snapshot MERGE store: Delta-parity semantics the swap store
-  * cannot give — snapshot-isolated reads across a concurrent publish,
-  * time travel per epoch, vacuum with retention, detect-and-fail
-  * concurrency — plus the MERGE row semantics shared with
+/** The snapshot MERGE store: Delta-parity semantics — snapshot-isolated
+  * reads across a concurrent publish, time travel per epoch, vacuum with
+  * retention, detect-and-fail concurrency — plus the MERGE row semantics shared with
   * [[Merge.upsert]], all on the partition-incremental layout. */
 object SnapshotMergeSpec {
   // racer injection shared with executor threads (local mode, one JVM):
@@ -87,8 +86,8 @@ class SnapshotMergeSpec extends SparkSuite {
       Seq((2L, "b2", "d1", 99L), (3L, "moved", "d9", 99L))
         .toDF("id", "v", "day", "ts"),
       Seq("id"), "day") // epoch 2 rewrites d1 AND empties/moves d2
-    // the swap store deletes d1's and d2's old files here — this store
-    // must keep serving the epoch-1 files the pinned plan references
+    // epoch 2 supersedes d1's and d2's versions — the store must keep
+    // serving the epoch-1 files the pinned plan references
     assert(asMap(pinned) === Map(
       1L -> ("a", "d1", 10L), 2L -> ("b", "d1", 10L), 3L -> ("c", "d2", 10L)),
       "pinned read must be the epoch-1 snapshot, not a torn or updated view")
@@ -109,8 +108,8 @@ class SnapshotMergeSpec extends SparkSuite {
   }
 
   test("concurrent writers at the protocol level: a merge computed against a stale snapshot cannot publish") {
-    // deterministic interleave (the MergeConcurrencySpec pattern): writer
-    // B reads base epoch 1, writer A commits epoch 2 in between, B's
+    // deterministic interleave at the protocol level: writer B reads
+    // base epoch 1, writer A commits epoch 2 in between, B's
     // publish-time claim of epoch 2 must fail — and the store afterwards
     // is exactly A's snapshot, never a torn mix
     val store = freshStore()
@@ -127,6 +126,23 @@ class SnapshotMergeSpec extends SparkSuite {
     assert(SnapshotMerge.committedEpochs(spark, store) === Seq(1L, 2L))
     assert(asMap(SnapshotMerge.read(spark, store)) === Map(
       1L -> ("a", "d1", 10L), 2L -> ("fromA", "d1", 20L), 3L -> ("c", "d2", 10L)))
+  }
+
+  test("epoch files are invisible to readers and pruned to bounded metadata") {
+    val store = freshStore()
+    bootstrap(store)
+    (1 to 5).foreach { i =>
+      SnapshotMerge.upsert(spark, store,
+        Seq((10L + i, s"v$i", "d1", i.toLong)).toDF("id", "v", "day", "ts"),
+        Seq("id"), "day")
+    }
+    assert(CommitMarker.currentEpoch(spark, store) === 6L)
+    // underscore-prefixed claim files are hidden from the scan
+    assert(SnapshotMerge.read(spark, store).count() === 8L)
+    // pruned: at most the current and previous epoch files survive
+    val epochs = new java.io.File(store).listFiles()
+      .map(_.getName).filter(_.startsWith("_GRAFT_EPOCH_")).toSeq
+    assert(epochs.size <= 2, s"epoch files must stay bounded: $epochs")
   }
 
   test("a bare claim appearing mid-merge does not abort a merge computed against the true tip — the manifest arbitrates") {

@@ -5,10 +5,9 @@ import graft.sources.CommitMarker
 import org.apache.spark.sql.functions._
 
 /** Real-THREAD races on one snapshot store (r16 verdict #6): the commit
-  * protocol was proven for interleaved upserts (MergeConcurrencySpec)
-  * and for deterministic single-point injections (SnapshotMergeSpec) —
-  * this spec runs compact ∥ deleteWhere ∥ upsert as genuinely
-  * concurrent driver threads, each retrying on the protocol's abort
+  * protocol is proven for deterministic single-point injections
+  * (SnapshotMergeSpec) — this spec runs compact ∥ deleteWhere ∥ upsert
+  * as genuinely concurrent driver threads, each retrying on the protocol's abort
   * exception, and checks the only outcomes the protocol promises:
   * every committed epoch chain is dense, every loser aborts cleanly
   * (no torn state, no leaked staging/version dirs), all three

@@ -235,140 +235,6 @@ class StreamingSpec extends SparkSuite {
     } finally query.stop()
   }
 
-  test("foreachBatch merge sink upserts each micro-batch by key") {
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mergesink").toString
-    val input = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("day", to_date(col("ts")))
-    val query = Streams.mergeSink(events, s"$tmp/table", s"$tmp/chk",
-      keys = Seq("event_id"), tsCol = "ts", partitionCol = "day").start()
-    try {
-      input.addData(
-        (1L, ts("2024-01-01 10:00:00"), 1L, "view", 1.0),
-        (2L, ts("2024-01-01 10:01:00"), 2L, "view", 2.0))
-      query.processAllAvailable()
-      // batch 2: update key 1 (newer value), insert key 3
-      input.addData(
-        (1L, ts("2024-01-02 09:00:00"), 1L, "view", 10.0),
-        (3L, ts("2024-01-02 09:01:00"), 3L, "view", 3.0))
-      query.processAllAvailable()
-      val t = spark.read.parquet(s"$tmp/table")
-      assert(t.count() === 3, "one row per key after the upsert")
-      val v1 = t.filter(col("event_id") === 1L).head()
-      assert(v1.getAs[Double]("value") === 10.0, "newer batch must win for key 1")
-      assert(t.filter(col("event_id") === 3L).count() === 1)
-    } finally query.stop()
-  }
-
-  test("merge sink bootstrap guard: half-written retries Overwrite, replay merges idempotently, no _SUCCESS still merges") {
-    // the CommitMarker contract (r13 verdict #2), pinned in the same
-    // three scenarios as the maintenance stores' gates:
-    //  (a) a HALF-WRITTEN bootstrap — data files but no _SUCCESS and no
-    //      marker — must be treated as uncommitted: the next batch
-    //      re-runs the Overwrite and the partials vanish (the old
-    //      java.io.File probe saw "non-empty dir" and MERGED over them);
-    //  (b) after the commit, losing _SUCCESS (the object-store
-    //      committer tuning writes none) must NOT re-trigger the
-    //      bootstrap: the engine's own marker keeps the merge branch;
-    //  (c) replaying a batch after the commit is idempotent per key.
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mergemark").toString
-    val table = s"$tmp/table"
-    // (a) simulate the half-written bootstrap: real data files, commit
-    // evidence stripped
-    Seq((99L, ts("2023-12-31 00:00:00"), 9L, "junk", 9.9))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("day", to_date(col("ts")))
-      .write.partitionBy("day").parquet(table)
-    def rmAll(name: String): Unit = {
-      import java.nio.file.{Files, Path}
-      Files.walk(Path.of(table)).filter(_.getFileName.toString == name)
-        .forEach(p => { Files.delete(p); () })
-    }
-    rmAll("_SUCCESS")
-    assert(!graft.sources.CommitMarker.committed(spark, table),
-      "stripped commit evidence must read as uncommitted")
-    val input = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("day", to_date(col("ts")))
-    val query = Streams.mergeSink(events, table, s"$tmp/chk",
-      keys = Seq("event_id"), tsCol = "ts", partitionCol = "day").start()
-    try {
-      input.addData(
-        (1L, ts("2024-01-01 10:00:00"), 1L, "view", 1.0),
-        (2L, ts("2024-01-01 10:01:00"), 2L, "view", 2.0))
-      query.processAllAvailable()
-      val t1 = spark.read.parquet(table)
-      assert(t1.count() === 2 && t1.filter(col("event_id") === 99L).count() === 0,
-        "the retried bootstrap must Overwrite the half-written partials")
-      assert(graft.sources.CommitMarker.committed(spark, table),
-        "the bootstrap must stamp the engine marker")
-      // (b) committer-independence: strip _SUCCESS, keep the marker
-      rmAll("_SUCCESS")
-      input.addData((3L, ts("2024-01-02 09:00:00"), 3L, "view", 3.0))
-      query.processAllAvailable()
-      val t2 = spark.read.parquet(table)
-      assert(t2.count() === 3 &&
-        t2.filter(col("event_id") === 1L).count() === 1,
-        "without _SUCCESS the marker must keep the MERGE branch (no wipe)")
-      // (c) replay idempotence: the same rows upsert to the same state
-      input.addData((3L, ts("2024-01-02 09:00:00"), 3L, "view", 3.0))
-      query.processAllAvailable()
-      val t3 = spark.read.parquet(table)
-      assert(t3.count() === 3, "replaying a committed batch must change nothing")
-    } finally query.stop()
-  }
-
-  test("merge sink strict guard (r15): an unmarked NON-EMPTY target fails fatally; adoption preserves it") {
-    // the r14 ADVICE scenario the three-scenario spec could not state:
-    // a PRE-MARKER merged store under marksuccessfuljobs=false is
-    // indistinguishable from a half-written bootstrap, and the default
-    // branch overwrites it (with a loud warning). Under the strict
-    // conf the batch must FAIL naming the one-line adoption step, and
-    // after adoption (CommitMarker.mark) the SAME checkpoint resumes
-    // on the MERGE branch — the old store's rows survive.
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mergestrict").toString
-    val table = s"$tmp/table"
-    Seq((50L, ts("2024-01-01 08:00:00"), 5L, "view", 5.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("day", to_date(col("ts")))
-      .write.partitionBy("day").parquet(table)
-    import java.nio.file.{Files, Path}
-    Files.walk(Path.of(table)).filter(_.getFileName.toString == "_SUCCESS")
-      .forEach(p => { Files.delete(p); () })
-    assert(graft.sources.CommitMarker.unmarkedNonEmpty(spark, table),
-      "the fixture must read as ambiguous (non-empty, no marker)")
-    spark.conf.set(graft.sources.CommitMarker.FailOnUnmarkedKey, "true")
-    try {
-      val input = MemoryStream[(Long, Timestamp, Long, String, Double)]
-      val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-        .withColumn("day", to_date(col("ts")))
-      val writer = Streams.mergeSink(events, table, s"$tmp/chk",
-        keys = Seq("event_id"), tsCol = "ts", partitionCol = "day")
-      val q1 = writer.start()
-      input.addData((1L, ts("2024-01-02 10:00:00"), 1L, "view", 1.0))
-      val ex = intercept[Throwable] { q1.processAllAvailable() }
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ msgs(e.getCause))
-      assert(msgs(ex).exists(m => m.contains("_GRAFT_COMMITTED")),
-        s"the failure must name the adoption step: ${msgs(ex)}")
-      q1.stop()
-      assert(spark.read.parquet(table).count() === 1,
-        "the strict guard must leave the ambiguous store untouched")
-      // operator adopts the store, the same checkpoint resumes: the
-      // replayed batch takes the MERGE branch and the old row survives
-      graft.sources.CommitMarker.mark(spark, table)
-      val q2 = writer.start()
-      q2.processAllAvailable()
-      q2.stop()
-      val t = spark.read.parquet(table)
-      assert(t.count() === 2 && t.filter(col("event_id") === 50L).count() === 1,
-        "adoption must preserve the pre-marker store's rows")
-    } finally spark.conf.unset(graft.sources.CommitMarker.FailOnUnmarkedKey)
-  }
-
   test("file-stream source → checkpointed parquet sink round-trips all rows") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
     val src = s"$tmp/src"; val out = s"$tmp/out"; val chk = s"$tmp/chk"
@@ -641,8 +507,7 @@ class StreamingSpec extends SparkSuite {
       keys = Seq("event_id"), tsCol = "ts", partitionCol = "day",
       vacuumKeep = 2, vacuumGraceMs = -1000L).start()
     try {
-      // trigger 1: bootstrap through the SAME merge path (no Overwrite
-      // branch, no marker, no ambiguity guard needed)
+      // trigger 1: an empty store bootstraps through the same merge path
       input.addData(
         (1L, ts("2024-01-01 10:00:00"), 1L, "view", 1.0),
         (2L, ts("2024-01-01 10:01:00"), 2L, "view", 2.0))
@@ -662,8 +527,8 @@ class StreamingSpec extends SparkSuite {
         .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
       assert(now === Map(1L -> 10.0, 2L -> 2.0, 3L -> 33.0))
       // snapshot isolation across the stream's publish: the pinned frame
-      // still reads epoch 1 bit-exact (the swap store would have deleted
-      // key 1's old day partition under it)
+      // still reads epoch 1 bit-exact, although key 1 left its old day
+      // partition
       assert(pinned.collect().map(_.getAs[Long]("event_id")).sorted.toSeq === Seq(1L, 2L))
       // trigger 3: an at-least-once REPLAY of trigger 2's rows — a new
       // epoch with IDENTICAL logical content (exactly-once per key), and
