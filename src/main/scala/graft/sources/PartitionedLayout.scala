@@ -6,11 +6,18 @@ import graft.functions.Det.{dsum, sqlDsum}
 
 /** The physical-layout operators under the oracle gate: partition-pruned
   * scans (q60) and bucketed zero-exchange joins (q62). Both write a
-  * derived layout into a per-JVM scratch area through the real writers
-  * (`Writers.writePartitioned` / `Writers.writeBucketed`), read it back,
-  * and must produce results hash-identical to the oracle computing the
-  * same answer from the flat fixture — proving the layout changes WHERE
-  * the data lives and what the scan READS, never what a query returns.
+  * derived layout through the real writers (`Writers.writePartitioned` /
+  * `Writers.writeBucketed`), read it back, and must produce results
+  * hash-identical to the oracle computing the same answer from the flat
+  * fixture — proving the layout changes WHERE the data lives and what
+  * the scan READS, never what a query returns.
+  *
+  * Every derived copy here (partitioned, clustered, JSONL/CSV, the q96
+  * sketch table, the q103 histogram store) is a pure function of the
+  * read-only fixture, so it is a [[graft.GateFixture]]: written once per
+  * (JVM, sfDir) into scratch deleted at exit, built on first use by
+  * whichever accessor asks, and only read after that. The bucketed
+  * tables are the exception — see [[bucketedTables]].
   *
   * This is the reference's storage design (delta_setup.py:395-431
   * partitions every table by y/m/d; etl_framework.py:286-291 filters on
@@ -20,40 +27,21 @@ import graft.functions.Det.{dsum, sqlDsum}
   */
 object PartitionedLayout {
 
-  // One scratch layout per (JVM, sfDir), deleted on JVM exit (the
-  // GateFixture memoization pattern): the layouts are pure
-  // functions of the read-only fixture, so verify + bench in one session
-  // write them once and every call after that only reads.
-  private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def scratchDir(key: String): String = dirs.computeIfAbsent(key, { _ =>
-    graft.FileTree.deleteAtExit(
-      java.nio.file.Files.createTempDirectory(s"graft_layout_$key")).toString
-  })
-
-  private val partitionedWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The y/m/d-partitioned copy of `events` for an sf dir (written once
-    * per JVM through the production writer). */
-  def partitionedEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = partitionedWritten.computeIfAbsent(sfDir, { _ =>
-      val out = scratchDir("part") + "/events_" + graft.PathKey(sfDir)
+  /** The directory of the y/m/d-partitioned copy of `events` for an sf
+    * dir, written through the production writer (the streaming-oracle
+    * gates stream this directory). */
+  def partitionedEventsDir(spark: SparkSession, sfDir: String): String =
+    graft.GateFixture.cached("graft_layout_part", sfDir) { root =>
+      val out = root.resolve("events").toString
       Writers.writePartitioned(
         graft.Tables.events(spark, sfDir)
           .select("event_id", "user_id", "event_type", "value", "ts"),
         "ts", out, SaveMode.Overwrite)
       out
-    })
-    spark.read.parquet(dir)
-  }
+    }
 
-  /** The scratch path of the partitioned copy — valid after
-    * [[partitionedEvents]] has materialized it for `sfDir` (the
-    * streaming-oracle query streams this directory). */
-  def partitionedEventsDir(sfDir: String): String = {
-    val dir = partitionedWritten.get(sfDir)
-    require(dir != null, s"partitionedEvents($sfDir) has not been materialized yet")
-    dir
-  }
+  def partitionedEvents(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(partitionedEventsDir(spark, sfDir))
 
   /** q60 — a date-sliced daily rollup over the partitioned layout. The
     * filter lands on PARTITION columns, so the scan's `PartitionFilters`
@@ -74,6 +62,12 @@ object PartitionedLayout {
        |WHERE year(ts) = 2024 AND month(ts) = 1 AND day(ts) BETWEEN 10 AND 20
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
+  // The scratch database's location: one per JVM (the database is
+  // created once and holds every sf dir's tables), deleted at exit.
+  private lazy val bucketDbDir: String = graft.FileTree.deleteAtExit(
+    java.nio.file.Files.createTempDirectory("graft_layout_bucket")).toString
+
+  // Not a GateFixture: see the comment in bucketedTables.
   private val bucketedWritten = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** The pair of order-key-bucketed tables for an sf dir, registered in a
@@ -82,7 +76,7 @@ object PartitionedLayout {
   def bucketedTables(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     def create(): (String, String) = {
       val db = "graft_scratch"
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '${scratchDir("bucket")}'")
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$bucketDbDir'")
       val sfx = graft.PathKey(sfDir)
       val (liName, ordName) = (s"$db.b_lineitem_$sfx", s"$db.b_orders_$sfx")
       Writers.writeBucketed(
@@ -93,7 +87,7 @@ object PartitionedLayout {
         ordName, "o_orderkey", 8)
       (liName, ordName)
     }
-    // Unlike the path-keyed memos below (whose parquet directories any
+    // Unlike the GateFixture layouts (whose parquet directories any
     // SparkSession can read), table names live in a SESSION's catalog —
     // a second SparkSession in the same JVM would get memoized names its
     // own catalog has never seen. Re-validate against the caller's
@@ -125,8 +119,6 @@ object PartitionedLayout {
       .orderBy("items")
   }
 
-  private val clusteredWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The OPTIMIZE'd copy of `events` for an sf dir: first written
     * ROUND-ROBIN (the worst possible layout — every file spans the full
     * key range, nothing can skip), then rewritten IN PLACE by the S9
@@ -135,15 +127,15 @@ object PartitionedLayout {
     * partitioning gives each file a tight key range and the in-file sort
     * tightens parquet row-group min/max stats on those keys. */
   def clusteredEventsDir(spark: SparkSession, sfDir: String): String =
-    clusteredWritten.computeIfAbsent(sfDir, { _ =>
-      val out = scratchDir("clust") + "/events_" + graft.PathKey(sfDir)
+    graft.GateFixture.cached("graft_layout_clust", sfDir) { root =>
+      val out = root.resolve("events").toString
       graft.Tables.events(spark, sfDir)
         .select("event_id", "user_id", "event_type", "value", "ts")
         .repartition(12)
         .write.mode(SaveMode.Overwrite).parquet(out)
       graft.etl.Maintenance.rewriteClustered(spark, out, Seq("event_type", "value"), 8)
       out
-    })
+    }
 
   /** q75 — the S9 OPTIMIZE/Z-ORDER analog under the oracle gate: a
     * selective rollup over the clustered rewrite of `events`. The filter
@@ -171,19 +163,17 @@ object PartitionedLayout {
        |WHERE event_type = 'error' AND value >= 100 AND value < 250
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val textWritten = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** The partitioned JSONL and CSV copies of `events` for an sf dir
     * (written once per JVM through the production writers). */
   private def textLayouts(spark: SparkSession, sfDir: String): (String, String) =
-    textWritten.computeIfAbsent(sfDir, { _ =>
-      val base = scratchDir("text") + "/" + graft.PathKey(sfDir)
+    graft.GateFixture.cached("graft_layout_text", sfDir) { root =>
       val ev = graft.Tables.events(spark, sfDir)
         .select("event_id", "user_id", "event_type", "value", "ts")
-      Writers.writeJsonl(ev, "ts", s"$base/jsonl", SaveMode.Overwrite)
-      Writers.writeCsv(ev, "ts", s"$base/csv", SaveMode.Overwrite)
-      (s"$base/jsonl", s"$base/csv")
-    })
+      val (jsonl, csv) = (root.resolve("jsonl").toString, root.resolve("csv").toString)
+      Writers.writeJsonl(ev, "ts", jsonl, SaveMode.Overwrite)
+      Writers.writeCsv(ev, "ts", csv, SaveMode.Overwrite)
+      (jsonl, csv)
+    }
 
   // Read the text formats with an explicit schema (never inference: a
   // schema-inference pass reads the data twice and can widen types under
@@ -262,8 +252,6 @@ object PartitionedLayout {
        |WHERE year(ts) = 2024 AND month(ts) = 1 AND dayofweek(ts) IN (0, 6)
        |GROUP BY 1, 2 ORDER BY 1""".stripMargin
 
-  private val sketchWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q96 — the PERSISTED mergeable-sketch table (SURVEY §7.4's optional
     * sketch tier, realized with Spark's DataSketches built-ins, never a
     * custom aggregate): per-day HLL sketches over `user_id` are written
@@ -292,9 +280,14 @@ object PartitionedLayout {
     * sides, so no engine WEEK() semantics are involved. Deterministic:
     * HLL register state is a pure function of the value SET (max per
     * register), invariant to partition order and merge shape. */
-  def sketchTableRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = sketchWritten.computeIfAbsent(graft.PathKey(sfDir), { _ =>
-      val out = scratchDir("sketch") + "/dau_" + graft.PathKey(sfDir)
+  def sketchTableRollup(spark: SparkSession, sfDir: String): DataFrame =
+    weeklySketchContract(spark, sfDir, spark.read.parquet(sketchTableDir(spark, sfDir)))
+
+  /** The persisted per-day sketch table `(day, sketch, exact_dau)` for
+    * `sfDir`, written once per JVM. */
+  private[graft] def sketchTableDir(spark: SparkSession, sfDir: String): String =
+    graft.GateFixture.cached("graft_layout_sketch", sfDir) { root =>
+      val out = root.resolve("dau").toString
       graft.Tables.events(spark, sfDir)
         .withColumn("day", to_date(col("ts")))
         .groupBy("day")
@@ -302,9 +295,7 @@ object PartitionedLayout {
           countDistinct(col("user_id")).as("exact_dau"))
         .write.mode(SaveMode.Overwrite).parquet(out)
       out
-    })
-    weeklySketchContract(spark, sfDir, spark.read.parquet(dir))
-  }
+    }
 
   /** q96's registered surface over ANY per-day sketch table — shared
     * by the batch-built path (q96) and the stream-maintained one
@@ -344,17 +335,7 @@ object PartitionedLayout {
       .groupBy(weekOf(col("day")).as("week"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("approx_wau"))
 
-  /** The persisted sketch-table path for `sfDir` — valid after
-    * [[sketchTableRollup]] materialized it. */
-  private[graft] def sketchTableDir(sfDir: String): String = {
-    val dir = sketchWritten.get(graft.PathKey(sfDir))
-    require(dir != null, s"sketchTableRollup($sfDir) has not been materialized yet")
-    dir
-  }
-
   // ---- q103: the persisted QUANTILE-histogram store -----------------------
-
-  private val histWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Histogram grid: unit-width value buckets, clamped into [0, 1023]
     * (the fixture's value domain is 0–560, so the clamp is headroom,
@@ -379,9 +360,14 @@ object PartitionedLayout {
     * PlanSpec additionally pins the estimate within one bucket width of
     * the true percentile. Store memoized per (JVM, sfDir) like q96's —
     * the same documented ingest-excluded bench timing. */
-  def quantileHistogramRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = histWritten.computeIfAbsent(graft.PathKey(sfDir), { _ =>
-      val out = scratchDir("hist") + "/vhist_" + graft.PathKey(sfDir)
+  def quantileHistogramRollup(spark: SparkSession, sfDir: String): DataFrame =
+    weeklyQuantilesFromStore(spark.read.parquet(histStoreDir(spark, sfDir)))
+
+  /** The persisted (day, bucket, cnt) histogram store for `sfDir`,
+    * written once per JVM. */
+  private[graft] def histStoreDir(spark: SparkSession, sfDir: String): String =
+    graft.GateFixture.cached("graft_layout_hist", sfDir) { root =>
+      val out = root.resolve("vhist").toString
       graft.Tables.events(spark, sfDir)
         .filter(col("value").isNotNull)
         .withColumn("day", to_date(col("ts")))
@@ -389,9 +375,7 @@ object PartitionedLayout {
         .agg(count(lit(1)).as("cnt"))
         .write.mode(SaveMode.Overwrite).parquet(out)
       out
-    })
-    weeklyQuantilesFromStore(spark.read.parquet(dir))
-  }
+    }
 
   /** The registered weekly-quantile surface over ANY (day, bucket, cnt)
     * histogram store — the merge is `sum(cnt)` by (week, bucket). */
@@ -416,14 +400,6 @@ object PartitionedLayout {
         pick(expr("(total * 95 + 99) div 100"), "p95_est"),
         pick(expr("(total * 99 + 99) div 100"), "p99_est"))
       .orderBy("week")
-  }
-
-  /** The persisted histogram-store path for `sfDir` — valid after
-    * [[quantileHistogramRollup]] materialized it. */
-  private[graft] def histStoreDir(sfDir: String): String = {
-    val dir = histWritten.get(graft.PathKey(sfDir))
-    require(dir != null, s"quantileHistogramRollup($sfDir) has not been materialized yet")
-    dir
   }
 
   private[graft] val q103Sql =

@@ -110,9 +110,7 @@ object SnapshotStream {
 
   private def q112Downstream(spark: SparkSession, sfDir: String): String =
     graft.GateFixture.cached("graft_snapstream_q112", sfDir) { root =>
-      val gs = graft.SessionClones.cloned("snapshot-stream-gate", spark) { s =>
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-      }
+      val gs = StreamingOracle.gateSession(spark)
       val a = root.resolve("bronze").toString
       val b = root.resolve("silver").toString
       val ev = graft.Tables.events(gs, sfDir)
@@ -154,17 +152,7 @@ object SnapshotStream {
           Seq("event_id"), "day")
         q.processAllAvailable()
       } finally q.stop()
-      // streaming receipt, the StreamingOracle convention: trigger
-      // count + input rows from the engine's own progress metrics
-      val prog = q.recentProgress
-      StreamingOracle.triggerCounts.put("q112",
-        prog.map(_.batchId).distinct.length)
-      StreamingOracle.gateReceipts.put("q112", StreamingOracle.GateReceipt(
-        "q112",
-        triggers = prog.map(_.batchId).distinct.length,
-        inputRows = prog.filter(_.numInputRows > 0).map(_.numInputRows).sum,
-        stateOperators = 0, stateRowsFinal = 0, stateRowsUpdated = 0,
-        lateRowsDropped = 0))
+      StreamingOracle.record("q112", q.recentProgress)
       b
     }
 
@@ -222,9 +210,7 @@ object SnapshotStream {
 
   private def q116Feed(spark: SparkSession, sfDir: String): String =
     graft.GateFixture.cached("graft_snapkeyed_q116", sfDir) { root =>
-      val gs = graft.SessionClones.cloned("snapshot-keyed-gate", spark) { s =>
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-      }
+      val gs = StreamingOracle.gateSession(spark)
       val up = root.resolve("upstream").toString
       val feed = root.resolve("feed").toString
       val ev = graft.Tables.events(gs, sfDir)
@@ -268,15 +254,7 @@ object SnapshotStream {
         SnapshotMerge.deleteWhere(gs, up, col("event_id") % 10 === 4)
         q.processAllAvailable()
       } finally q.stop()
-      val prog = q.recentProgress
-      StreamingOracle.triggerCounts.put("q116",
-        prog.map(_.batchId).distinct.length)
-      StreamingOracle.gateReceipts.put("q116", StreamingOracle.GateReceipt(
-        "q116",
-        triggers = prog.map(_.batchId).distinct.length,
-        inputRows = prog.filter(_.numInputRows > 0).map(_.numInputRows).sum,
-        stateOperators = 0, stateRowsFinal = 0, stateRowsUpdated = 0,
-        lateRowsDropped = 0))
+      StreamingOracle.record("q116", q.recentProgress)
       feed
     }
 
@@ -349,9 +327,7 @@ object SnapshotStream {
 
   private def q117Feed(spark: SparkSession, sfDir: String): String =
     graft.GateFixture.cached("graft_snaplineage_q117", sfDir) { root =>
-      val gs = graft.SessionClones.cloned("snapshot-lineage-gate", spark) { s =>
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-      }
+      val gs = StreamingOracle.gateSession(spark)
       val up = root.resolve("upstream").toString
       val feed = root.resolve("feed").toString
       val ev = graft.Tables.events(gs, sfDir)
@@ -398,15 +374,7 @@ object SnapshotStream {
       val withRows = q2.recentProgress.filter(_.numInputRows > 0)
       require(withRows.length == 1,
         s"the backlog must arrive as one batch, got ${withRows.length}")
-      val prog = q1.recentProgress ++ q2.recentProgress
-      StreamingOracle.triggerCounts.put("q117",
-        prog.map(_.batchId).distinct.length)
-      StreamingOracle.gateReceipts.put("q117", StreamingOracle.GateReceipt(
-        "q117",
-        triggers = prog.map(_.batchId).distinct.length,
-        inputRows = prog.filter(_.numInputRows > 0).map(_.numInputRows).sum,
-        stateOperators = 0, stateRowsFinal = 0, stateRowsUpdated = 0,
-        lateRowsDropped = 0))
+      StreamingOracle.record("q117", q1.recentProgress ++ q2.recentProgress)
       feed
     }
 
@@ -475,9 +443,7 @@ object SnapshotStream {
 
   private def q118Downstream(spark: SparkSession, sfDir: String): String =
     graft.GateFixture.cached("graft_snapevolve_q118", sfDir) { root =>
-      val gs = graft.SessionClones.cloned("snapshot-evolve-gate", spark) { s =>
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-      }
+      val gs = StreamingOracle.gateSession(spark)
       val up = root.resolve("upstream").toString
       val down = root.resolve("silver").toString
       val ev = graft.Tables.events(gs, sfDir)
@@ -529,15 +495,7 @@ object SnapshotStream {
         .filter(col("event_id") % 10 === 6 && col("score").isNotNull)
         .count() == 0L,
         "epoch-2 scores flowed before the restart and must not be downstream")
-      val prog = q1.recentProgress ++ q2.recentProgress
-      StreamingOracle.triggerCounts.put("q118",
-        prog.map(_.batchId).distinct.length)
-      StreamingOracle.gateReceipts.put("q118", StreamingOracle.GateReceipt(
-        "q118",
-        triggers = prog.map(_.batchId).distinct.length,
-        inputRows = prog.filter(_.numInputRows > 0).map(_.numInputRows).sum,
-        stateOperators = 0, stateRowsFinal = 0, stateRowsUpdated = 0,
-        lateRowsDropped = 0))
+      StreamingOracle.record("q118", q1.recentProgress ++ q2.recentProgress)
       down
     }
 

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import graft.functions.Det.{dsum, sqlDsum}
 
 /** Structured Streaming EXECUTION under the DuckDB oracle gate.
@@ -60,6 +60,9 @@ object StreamingOracle {
 
   // ---- scratch management -------------------------------------------------
 
+  // Per-run directories only: every fixture a run merely READS (ordered
+  // slices, the docs copy, the maintenance and l55 stores) is a
+  // graft.GateFixture, built once per (JVM, sfDir).
   private lazy val scratchRoot: Path =
     graft.FileTree.deleteAtExit(Files.createTempDirectory("graft_stream_oracle"))
 
@@ -84,16 +87,8 @@ object StreamingOracle {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val ChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-  // Default gate sizing; a caller session can override with the
-  // `spark.graft.gatePartitions` conf (run-time sizing, not semantics —
-  // at production scale more state partitions mean more parallelism and
-  // smaller per-store footprints; results are partition-count invariant
-  // by the StateStore contract, which StreamingSpec pins).
-  private val GatePartitions = "2"
-  private val GatePartitionsKey = "spark.graft.gatePartitions"
-
   /** The session a gate's stream runs on: a memoized per-(caller,
-    * sizing) CLONE. `SparkSession.newSession` shares the SparkContext,
+    * provider) CLONE. `SparkSession.newSession` shares the SparkContext,
     * catalog, and cache but owns an independent SQLConf, so the gate
     * sizing (2 shuffle/state partitions) and the state
     * provider are set ONCE on the clone and never touch the caller's
@@ -115,20 +110,17 @@ object StreamingOracle {
     * HDFS-backed provider, whose per-batch commit is a delta-file write
     * instead of a RocksDB open+changelog round — the floor's dominant
     * term at fixture scale. At production scale every gate's conf is a
-    * run-time knob; nothing in the operators changes. */
-  private def gateSession(spark: SparkSession,
-                          partitions: String = GatePartitions,
-                          rocksDb: Boolean = false): SparkSession = {
-    // caller-session override wins over the per-gate default when the
-    // gate would use the module default (an explicit per-gate argument
-    // is that gate's own sizing decision and stays authoritative)
-    val sized =
-      if (partitions == GatePartitions)
-        spark.conf.get(GatePartitionsKey, GatePartitions)
-      else partitions
+    * run-time knob; nothing in the operators changes.
+    *
+    * Two shuffle/state partitions is run-time sizing, not semantics:
+    * results are partition-count invariant by the StateStore contract,
+    * which StreamingSpec pins. The SnapshotStream gates (q112, q116–q118)
+    * run on the in-memory clone too. */
+  private[streaming] def gateSession(spark: SparkSession,
+                                     rocksDb: Boolean = false): SparkSession =
     graft.SessionClones.cloned(
-      s"stream-gate-$sized-${if (rocksDb) "rocks" else "mem"}", spark) { s =>
-      s.conf.set("spark.sql.shuffle.partitions", sized)
+      s"stream-gate-${if (rocksDb) "rocks" else "mem"}", spark) { s =>
+      s.conf.set("spark.sql.shuffle.partitions", "2")
       // GateReceipt sums over recentProgress, which Spark caps at 100
       // entries by default — raise it so a many-trigger gate's receipt
       // never silently under-reports (r15 review; gates run 2–4
@@ -143,7 +135,6 @@ object StreamingOracle {
         s.conf.set(ChangelogKey, "true")
       }
     }
-  }
 
   /** Per-gate trigger counts from the last run's own progress metrics
     * (distinct batch ids). The streaming block's cost is ~linear in
@@ -169,39 +160,41 @@ object StreamingOracle {
                                stateRowsUpdated: Long, lateRowsDropped: Long)
 
   /** Last-run receipts per gate (JVM-global mirror, same contract as
-    * [[triggerCounts]]): populated by every [[drain]], read by the
+    * [[triggerCounts]]): populated by every [[record]], read by the
     * StreamAudit main that prints PLAN_AUDIT's streaming section. */
   private[graft] val gateReceipts =
     new java.util.concurrent.ConcurrentHashMap[String, GateReceipt]()
 
-  /** Start the gate's stream, drain it, stop it; record its trigger
-    * count and state-store receipt under `gate`. */
+  /** Start the gate's stream, drain it, stop it; [[record]] it under
+    * `gate`. */
   private def drain(gate: String)(start: => StreamingQuery): StreamingQuery = {
     val q = start
     try q.processAllAvailable() finally q.stop()
-    val prog = q.recentProgress
-    triggerCounts.put(gate, prog.map(_.batchId).distinct.length)
-    val dataBatches = prog.filter(_.numInputRows > 0)
+    record(gate, q.recentProgress)
+    q
+  }
+
+  /** Record a gate's trigger count and state-store receipt from its
+    * streams' progress (several streams' progress concatenated when the
+    * gate restarts its stream). */
+  private[streaming] def record(gate: String, prog: Array[StreamingQueryProgress]): Unit = {
+    val triggers = prog.map(_.batchId).distinct.length
     val lastWithState = prog.reverse.find(_.stateOperators.nonEmpty)
+    triggerCounts.put(gate, triggers)
     gateReceipts.put(gate, GateReceipt(
       gate,
-      triggers = prog.map(_.batchId).distinct.length,
-      inputRows = dataBatches.map(_.numInputRows).sum,
+      triggers = triggers,
+      inputRows = prog.filter(_.numInputRows > 0).map(_.numInputRows).sum,
       stateOperators = lastWithState.map(_.stateOperators.length).getOrElse(0),
       stateRowsFinal = lastWithState.toSeq
         .flatMap(_.stateOperators.map(_.numRowsTotal)).sum,
       stateRowsUpdated = prog.flatMap(_.stateOperators.map(_.numRowsUpdated)).sum,
       lateRowsDropped = prog.flatMap(
         _.stateOperators.map(_.numRowsDroppedByWatermark)).sum))
-    if (sys.env.contains("GRAFT_GATE_DEBUG"))
-      prog.foreach { p =>
-        System.err.println(s"[gate:$gate] batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durationMs=${p.durationMs}")
-      }
-    q
   }
 
-  // Per-directory (schema, fileCount) memo: the gate layouts are
+  // Per-directory (schema, fileCount) memo — not a GateFixture: it
+  // builds nothing, it caches reads of a directory. The gate layouts are
   // written once per JVM and never change, so the batch reads that
   // mftFor and sourceOver need (a footer for the schema, a listing for
   // the file count) happen once per dir instead of twice per gate
@@ -249,8 +242,7 @@ object StreamingOracle {
     * file-sink shape for Complete mode; reference:
     * real_time_streaming.py:155-211). */
   def streamingWindowRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.sources.PartitionedLayout.partitionedEvents(spark, sfDir)
-    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(sfDir)
+    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(spark, sfDir)
     val gs = gateSession(spark)
     val run = freshRunDir("q68")
     val result = run.resolve("result").toString
@@ -292,8 +284,7 @@ object StreamingOracle {
     * formulation proves the state machine is exact under any micro-batch
     * slicing the source produces. */
   def streamingFunnelSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.sources.PartitionedLayout.partitionedEvents(spark, sfDir)
-    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(sfDir)
+    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(spark, sfDir)
     val gs = gateSession(spark)
     import gs.implicits._
     val run = freshRunDir("q69")
@@ -320,8 +311,6 @@ object StreamingOracle {
 
   // ---- q70: streaming dedup -----------------------------------------------
 
-  private val docsWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q70 — STREAMING corpus dedup under the oracle: `documents` arrives
     * as ten separate files streamed across several triggers, and the
     * streaming `dropDuplicates` state machine keeps the first
@@ -334,14 +323,14 @@ object StreamingOracle {
     * The survivors land in the PRODUCTION checkpointed parquet sink
     * (S5); the rollup reads them back from storage. */
   def streamingDedupStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = docsWritten.computeIfAbsent(sfDir, { _ =>
-      val out = scratchRoot.resolve("docs_" + graft.PathKey(sfDir)).toString
+    val dir = graft.GateFixture.cached("graft_stream_docs", sfDir) { root =>
+      val out = root.resolve("docs").toString
       graft.Tables.documents(spark, sfDir)
         .select("doc_id", "text", "lang")
         .repartition(10, col("doc_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
     val gs = gateSession(spark)
     val run = freshRunDir("q70")
     val result = run.resolve("result").toString
@@ -413,34 +402,31 @@ object StreamingOracle {
   // wall clock.
   private val SliceEpochMs = 1700000000000L
 
-  private val orderedWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write `slices` of the 5-column event projection as single parquet
-    * files `000.parquet, 001.parquet, …` whose ascending modification
-    * times pin the file source's processing order (oldest-first is the
-    * source's documented default). Memoized per (gate, sfDir) — the
-    * layout is a pure function of the read-only fixture. */
-  private def orderedSliceDir(spark: SparkSession, gate: String, sfDir: String,
-                              slices: Seq[DataFrame]): String =
-    orderedWritten.computeIfAbsent(
-      gate + "_" + graft.PathKey(sfDir), { key =>
-        val dir = scratchRoot.resolve(key)
-        Files.createDirectories(dir)
-        slices.zipWithIndex.foreach { case (df, i) =>
-          val tmp = scratchRoot.resolve(s"${key}_tmp")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val listing = Files.list(tmp)
-          val part =
-            try listing.filter(p => p.getFileName.toString.startsWith("part-"))
-              .findFirst().orElseThrow()
-            finally listing.close()
-          val dst = dir.resolve(f"$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          dst.toFile.setLastModified(SliceEpochMs + i * 60000L)
-          graft.FileTree.delete(tmp)
-        }
-        dir.toString
-      })
+  /** Write `slices` as single parquet files `000.parquet, 001.parquet,
+    * …` whose ascending modification times pin the file source's
+    * processing order (oldest-first is the source's documented default).
+    * A GateFixture per (layout, sfDir) — the layout is a pure function of
+    * the read-only fixture — so `slices` is evaluated only by the one
+    * build. */
+  private def orderedSliceDir(layout: String, sfDir: String,
+                              slices: => Seq[DataFrame]): String =
+    graft.GateFixture.cached(s"graft_stream_slices_$layout", sfDir) { root =>
+      val dir = Files.createDirectories(root.resolve("slices"))
+      val tmp = root.resolve("tmp")
+      slices.zipWithIndex.foreach { case (df, i) =>
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val listing = Files.list(tmp)
+        val part =
+          try listing.filter(p => p.getFileName.toString.startsWith("part-"))
+            .findFirst().orElseThrow()
+          finally listing.close()
+        val dst = dir.resolve(f"$i%03d.parquet")
+        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+        dst.toFile.setLastModified(SliceEpochMs + i * 60000L)
+        graft.FileTree.delete(tmp)
+      }
+      dir.toString
+    }
 
   private def eventCols(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.events(spark, sfDir)
@@ -474,12 +460,11 @@ object StreamingOracle {
     * ~0.4 s trigger round per gate on three gates. q74's inner join
     * ignores the sentinel by construction (user −1 is partnerless), so
     * it no longer needs a file-glob to exclude it. */
-  private def inOrderEventsDir(spark: SparkSession, sfDir: String): String = {
-    val ev = eventCols(spark, sfDir)
-    orderedSliceDir(spark, "inorder2", sfDir, Seq(
-      daySlice(ev, 1, 15),
-      daySlice(ev, 16, 31).unionByName(sentinel(spark, -1L))))
-  }
+  private def inOrderEventsDir(spark: SparkSession, sfDir: String): String =
+    orderedSliceDir("inorder2", sfDir, {
+      val ev = eventCols(spark, sfDir)
+      Seq(daySlice(ev, 1, 15), daySlice(ev, 16, 31).unionByName(sentinel(spark, -1L)))
+    })
 
   /** Per-run stats of the last q72 execution, read by StreamingSpec to
     * assert the semantics the final table alone cannot show: that ≥1
@@ -513,16 +498,17 @@ object StreamingOracle {
     * silently admitted — observed empirically; the extra batch makes
     * the drop deterministic under the lag. */
   def streamingLateWindowRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = eventCols(spark, sfDir)
     // late tail + sentinel share the third file (round 11): the drop
     // decision is per-row against the previous batch's watermark — the
     // day-30 watermark planned after batch 1 — so co-arrival with the
     // sentinel changes nothing about which rows are late, and one
     // RocksDB trigger round drops out; the two on-time batches ahead of
     // the tail (the load-bearing lag protection) keep their own files
-    val dir = orderedSliceDir(spark, "q72v2", sfDir, Seq(
-      daySlice(ev, 6, 15), daySlice(ev, 16, 31),
-      daySlice(ev, 1, 5).unionByName(sentinel(spark, -1L))))
+    val dir = orderedSliceDir("q72v2", sfDir, {
+      val ev = eventCols(spark, sfDir)
+      Seq(daySlice(ev, 6, 15), daySlice(ev, 16, 31),
+        daySlice(ev, 1, 5).unionByName(sentinel(spark, -1L)))
+    })
     // q72 is THE production-state-backend gate: RocksDB + changelog
     // checkpointing stay on, and StreamingSpec asserts the provider
     // from this run's own metrics (see gateSession's provider split)
@@ -615,7 +601,7 @@ object StreamingOracle {
     * partnerless by construction, so it joins to nothing. */
   def streamingClickAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = inOrderEventsDir(spark, sfDir)
-    val gs = gateSession(spark, partitions = "2")
+    val gs = gateSession(spark)
     val run = freshRunDir("q74")
     val result = run.resolve("result").toString
     // two separate sources on purpose: the single-source self-join
@@ -661,8 +647,7 @@ object StreamingOracle {
     * STORAGE to q48's summary, and hash-matching the same batch oracle
     * (q48Sql) all three batch shapes already share. */
   def streamingAsOfEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.sources.PartitionedLayout.partitionedEvents(spark, sfDir)
-    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(sfDir)
+    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(spark, sfDir)
     val gs = gateSession(spark)
     val run = freshRunDir("q85")
     val result = run.resolve("result").toString
@@ -702,8 +687,7 @@ object StreamingOracle {
     * batch's matches append to a checkpointed parquet sink and the
     * rollup runs FROM STORAGE under q88's oracle. */
   def streamingRangeAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.sources.PartitionedLayout.partitionedEvents(spark, sfDir)
-    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(sfDir)
+    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(spark, sfDir)
     val gs = gateSession(spark)
     val run = freshRunDir("q91")
     val result = run.resolve("result").toString
@@ -952,20 +936,15 @@ object StreamingOracle {
     * bookkeeping), so the duplicate stream was pure commit-protocol
     * floor: consolidating halves the maintenance triggers without
     * weakening either contract — each store's stream ≡ batch pin
-    * compares the SAME store contents as before. Memoized per (JVM,
-    * sfDir) like the l55 seed store: whichever gate runs first pays the
-    * stream, the other reads its store — the exact sharing a production
-    * deployment gets from maintaining n stores off one topic
-    * subscription instead of n. */
-  private val maintStoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def maintainedStores(spark: SparkSession, sfDir: String): (String, String) =
-    maintStoreDirs.computeIfAbsent(graft.PathKey(sfDir), { _ =>
-      graft.sources.PartitionedLayout.partitionedEvents(spark, sfDir)
-      val dir = graft.sources.PartitionedLayout.partitionedEventsDir(sfDir)
+    * compares the SAME store contents as before. A GateFixture per
+    * (JVM, sfDir) like the l55 seed store: whichever gate runs first pays
+    * the stream, the other reads its store — the exact sharing a
+    * production deployment gets from maintaining n stores off one topic
+    * subscription instead of n. Returns (sketch store, histogram store). */
+  private[graft] def maintainedStores(spark: SparkSession, sfDir: String): (String, String) =
+    graft.GateFixture.cached("graft_stream_maint", sfDir) { run =>
+      val dir = graft.sources.PartitionedLayout.partitionedEventsDir(spark, sfDir)
       val gs = gateSession(spark)
-      val run = freshRunDir("maint")
       val sketchStore = run.resolve("sketch_store").toString
       val histStore = run.resolve("hist_store").toString
       val src = sourceOver(gs, dir, mftFor(gs, dir))
@@ -986,7 +965,7 @@ object StreamingOracle {
           .start()
       }
       (sketchStore, histStore)
-    })
+    }
 
   /** q102 — q96's PRODUCTION TWIN: the per-day HLL sketch table
     * maintained INCREMENTALLY by the streaming engine instead of
@@ -1005,16 +984,9 @@ object StreamingOracle {
     * STREAM-MAINTAINED STORE under q96's own oracle; PlanSpec
     * additionally pins stream-maintained ≡ batch-built per-week
     * estimates exactly. */
-  /** The last q102 run's maintained store — read by PlanSpec to pin
-    * stream-maintained ≡ batch-built per-week estimates exactly. */
-  @volatile private[graft] var lastSketchStoreDir: Option[String] = None
-
-  def streamingSketchMaintain(spark: SparkSession, sfDir: String): DataFrame = {
-    val store = maintainedStores(spark, sfDir)._1
-    lastSketchStoreDir = Some(store)
+  def streamingSketchMaintain(spark: SparkSession, sfDir: String): DataFrame =
     graft.sources.PartitionedLayout.weeklySketchContract(spark, sfDir,
-      graft.etl.SnapshotMerge.read(spark, store))
-  }
+      graft.etl.SnapshotMerge.read(spark, maintainedStores(spark, sfDir)._1))
 
   /** The store's committed rows, or None before its first commit. The
     * tip probe ignores anything a crashed trigger left behind: files
@@ -1045,10 +1017,6 @@ object StreamingOracle {
 
   // ---- q104: streaming quantile-histogram maintenance ---------------------
 
-  /** The last q104 run's maintained store — read by PlanSpec to pin
-    * stream-maintained ≡ batch-built, ROW for ROW. */
-  @volatile private[graft] var lastHistStoreDir: Option[String] = None
-
   /** q104 — q103's PRODUCTION TWIN, and the strongest contract in the
     * maintenance family (one shared stream with q102 — see
     * [[maintainedStores]]): each trigger's `foreachBatch` computes the
@@ -1061,12 +1029,9 @@ object StreamingOracle {
     * the batch build row for row under any slicing, and the registered
     * surface answers q103's weekly quantiles FROM THE STREAM-MAINTAINED
     * STORE under q103's own hash-exact oracle. */
-  def streamingHistogramMaintain(spark: SparkSession, sfDir: String): DataFrame = {
-    val store = maintainedStores(spark, sfDir)._2
-    lastHistStoreDir = Some(store)
+  def streamingHistogramMaintain(spark: SparkSession, sfDir: String): DataFrame =
     graft.sources.PartitionedLayout.weeklyQuantilesFromStore(
-      graft.etl.SnapshotMerge.read(spark, store))
-  }
+      graft.etl.SnapshotMerge.read(spark, maintainedStores(spark, sfDir)._2))
 
   /** One q104 trigger's merge, REPLAY-IDEMPOTENT via the documented
     * foreachBatch recipe: the batch id rides the store as a per-day
@@ -1129,10 +1094,6 @@ object StreamingOracle {
 
   // ---- l55: streaming incremental near-dup dedup --------------------------
 
-  private val l55Cut = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val l55Seed = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val l55Store = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** l55 — l35's PRODUCTION TWIN: incremental MinHash-LSH dedup
     * maintained BY THE STREAMING ENGINE. The corpus side sits in a
     * persisted signature + band store (the store l35 assumes
@@ -1165,20 +1126,18 @@ object StreamingOracle {
     // the arriving slice, split in doc_id order across two files —
     // within-file order is irrelevant (the within-batch rule is the
     // pid < bid arithmetic, not arrival order inside a trigger)
-    val slice = docs.filter(isBatchId(col("doc_id"))).select("doc_id", "text")
-    val cut: Long = l55Cut.computeIfAbsent(graft.PathKey(sfDir), { _ =>
+    val dir = orderedSliceDir("l55", sfDir, {
+      val slice = docs.filter(isBatchId(col("doc_id"))).select("doc_id", "text")
       val r = slice.agg(max(col("doc_id"))).head()
       require(!r.isNullAt(0), s"l55: no doc_id % 10 = 7 slice in $sfDir documents")
-      r.getLong(0) / 2
+      val cut = r.getLong(0) / 2
+      Seq(slice.filter(col("doc_id") <= cut), slice.filter(col("doc_id") > cut))
     })
-    val dir = orderedSliceDir(spark, "l55", sfDir, Seq(
-      slice.filter(col("doc_id") <= cut),
-      slice.filter(col("doc_id") > cut)))
     // The maintained DROPPED store — like the q102/q104 maintenance
-    // stores (see maintainedStores) — is memoized per (JVM, sfDir)
-    // since round 14 (r13 verdict #6): the store is a pure function of
-    // the read-only fixture (deterministic ordered slicing,
-    // deterministic per-batch steps), so whichever caller runs first
+    // stores (see maintainedStores) — is a GateFixture per (JVM,
+    // sfDir): the store is a pure function of the read-only fixture
+    // (deterministic ordered slicing, deterministic per-batch steps),
+    // so whichever caller runs first
     // pays the stream and every later call reads its store — the
     // sharing a production deployment gets from ONE subscription
     // maintaining the dedup index, instead of re-ingesting the topic
@@ -1186,69 +1145,67 @@ object StreamingOracle {
     // subscription reads the partitioned EVENTS topic, this one the
     // ordered DOCUMENTS slice — different sources, so memoization is
     // the consolidation that exists here.
-    val droppedStoreShared = l55Store.computeIfAbsent(graft.PathKey(sfDir), { _ =>
-    val gs = gateSession(spark)
-    val run = freshRunDir("l55")
-    // The SEED store — the corpus side's signatures + band rows — is a
-    // pure function of the read-only fixture (it IS the "precomputed
-    // signature store" l35 assumes a production pipeline maintains), so
-    // it is written once per (JVM, sfDir) like the ordered layouts and
-    // NOT re-ingested per run: the gate times the streaming maintenance,
-    // not the store build — the same documented ingest-excluded timing
-    // as q96's sketch table. Per-run mutations go to OVERLAY dirs (the
-    // stream's appends), and every store read spans seed ∪ overlay.
-    val (seedSigs, seedBands) = l55Seed.computeIfAbsent(graft.PathKey(sfDir), { key =>
-      val base = scratchRoot.resolve(s"l55_seed_$key")
-      val sigD = base.resolve("sigs").toString
-      val bandD = base.resolve("bands").toString
-      val corpusSigs = graft.llm.SigStore.portable(spark, sfDir)
-        .filter(!isBatchId(col("doc_id")))
-      corpusSigs.write.parquet(sigD)
-      graft.llm.TextDedup.portableBandRows(corpusSigs).write.parquet(bandD)
-      (sigD, bandD)
-    })
-    val sigOverlay = run.resolve("sig_overlay").toString
-    val bandOverlay = run.resolve("band_overlay").toString
-    val droppedStore = run.resolve("dropped").toString
-    // schema-bearing empty init: the final rollup reads the dropped
-    // store even if no batch dropped anything
-    spark.range(0).select(col("id").as("doc_id")).write.parquet(s"$droppedStore/init")
-    drain("l55") {
-      sourceOver(gs, dir, mftFor(gs, dir))
-        .writeStream
-        .option("checkpointLocation", run.resolve("checkpoint").toString)
-        // REPLAY-IDEMPOTENT without a transaction ledger: every write
-        // goes to a per-batch subdir in Overwrite mode, and every read
-        // spans the seed plus STRICTLY EARLIER batches' subdirs — so a
-        // retried trigger recomputes from exactly the inputs its first
-        // attempt saw and overwrites its own subdirs with identical
-        // content. Plain appends here would double rows under replay:
-        // duplicate dropped ids would inflate the rollup join, and
-        // duplicate band rows would shift the bucket-cap ranks.
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val sp = batch.sparkSession
-          graft.plans.GraftExtensions.register(sp)
-          val priorSigs = seedSigs +: (0L until batchId).map(k => s"$sigOverlay/b$k")
-          val priorBands = seedBands +: (0L until batchId).map(k => s"$bandOverlay/b$k")
-          val batchSigs = graft.llm.TextDedup.withPortableSignatures(batch).persist()
-          val batchBands = graft.llm.TextDedup.portableBandRows(batchSigs).persist()
-          try {
-            graft.llm.TextDedup.incrementalStreamStep(
-                batchSigs, batchBands,
-                sp.read.parquet(priorSigs: _*),
-                sp.read.parquet(priorBands: _*))
-              .write.mode("overwrite").parquet(s"$droppedStore/b$batchId")
-            // overlay writes AFTER the probe has materialized: later
-            // batches see this batch; this batch never probes itself
-            // through the store
-            batchSigs.write.mode("overwrite").parquet(s"$sigOverlay/b$batchId")
-            batchBands.write.mode("overwrite").parquet(s"$bandOverlay/b$batchId")
-          } finally { batchSigs.unpersist(); batchBands.unpersist(); () }
-        }
-        .start()
+    val droppedStoreShared = graft.GateFixture.cached("graft_stream_l55_dropped", sfDir) { run =>
+      val gs = gateSession(spark)
+      // The SEED store — the corpus side's signatures + band rows — is a
+      // pure function of the read-only fixture (it IS the "precomputed
+      // signature store" l35 assumes a production pipeline maintains), so
+      // it is written once per (JVM, sfDir) like the ordered layouts and
+      // NOT re-ingested per run: the gate times the streaming maintenance,
+      // not the store build — the same documented ingest-excluded timing
+      // as q96's sketch table. Per-run mutations go to OVERLAY dirs (the
+      // stream's appends), and every store read spans seed ∪ overlay.
+      val (seedSigs, seedBands) = graft.GateFixture.cached("graft_stream_l55_seed", sfDir) { base =>
+        val sigD = base.resolve("sigs").toString
+        val bandD = base.resolve("bands").toString
+        val corpusSigs = graft.llm.SigStore.portable(spark, sfDir)
+          .filter(!isBatchId(col("doc_id")))
+        corpusSigs.write.parquet(sigD)
+        graft.llm.TextDedup.portableBandRows(corpusSigs).write.parquet(bandD)
+        (sigD, bandD)
+      }
+      val sigOverlay = run.resolve("sig_overlay").toString
+      val bandOverlay = run.resolve("band_overlay").toString
+      val droppedStore = run.resolve("dropped").toString
+      // schema-bearing empty init: the final rollup reads the dropped
+      // store even if no batch dropped anything
+      spark.range(0).select(col("id").as("doc_id")).write.parquet(s"$droppedStore/init")
+      drain("l55") {
+        sourceOver(gs, dir, mftFor(gs, dir))
+          .writeStream
+          .option("checkpointLocation", run.resolve("checkpoint").toString)
+          // REPLAY-IDEMPOTENT without a transaction ledger: every write
+          // goes to a per-batch subdir in Overwrite mode, and every read
+          // spans the seed plus STRICTLY EARLIER batches' subdirs — so a
+          // retried trigger recomputes from exactly the inputs its first
+          // attempt saw and overwrites its own subdirs with identical
+          // content. Plain appends here would double rows under replay:
+          // duplicate dropped ids would inflate the rollup join, and
+          // duplicate band rows would shift the bucket-cap ranks.
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            val sp = batch.sparkSession
+            graft.plans.GraftExtensions.register(sp)
+            val priorSigs = seedSigs +: (0L until batchId).map(k => s"$sigOverlay/b$k")
+            val priorBands = seedBands +: (0L until batchId).map(k => s"$bandOverlay/b$k")
+            val batchSigs = graft.llm.TextDedup.withPortableSignatures(batch).persist()
+            val batchBands = graft.llm.TextDedup.portableBandRows(batchSigs).persist()
+            try {
+              graft.llm.TextDedup.incrementalStreamStep(
+                  batchSigs, batchBands,
+                  sp.read.parquet(priorSigs: _*),
+                  sp.read.parquet(priorBands: _*))
+                .write.mode("overwrite").parquet(s"$droppedStore/b$batchId")
+              // overlay writes AFTER the probe has materialized: later
+              // batches see this batch; this batch never probes itself
+              // through the store
+              batchSigs.write.mode("overwrite").parquet(s"$sigOverlay/b$batchId")
+              batchBands.write.mode("overwrite").parquet(s"$bandOverlay/b$batchId")
+            } finally { batchSigs.unpersist(); batchBands.unpersist(); () }
+          }
+          .start()
+      }
+      droppedStore
     }
-    droppedStore
-    })
     val dropped = spark.read.option("recursiveFileLookup", "true")
       .parquet(droppedStoreShared).withColumn("dr", lit(1))
     docs.filter(isBatchId(col("doc_id")))

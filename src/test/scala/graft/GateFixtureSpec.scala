@@ -79,4 +79,45 @@ class GateFixtureSpec extends SparkSuite {
     assert(Thread.interrupted(), // reads AND clears — leaves the test thread clean
       "the interrupt flag must be restored on the way out")
   }
+
+  test("a tuple-valued fixture is built once and every caller gets the same pair") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val key = s"gfspec_pair_${System.nanoTime()}"
+    def pair(): (String, String) = GateFixture.cached(key, "/sf") { root =>
+      builds.incrementAndGet()
+      (root.resolve("a").toString, root.resolve("b").toString)
+    }
+    val first = pair()
+    assert(pair() === first && builds.get() === 1, "memoized after the first build")
+    assert(first._1.endsWith("a") && first._2.endsWith("b"))
+  }
+
+  test("a slow build under one key does not block a build under another key") {
+    val slowKey = s"gfspec_slow_${System.nanoTime()}"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val slow = new Thread(() => {
+      GateFixture.cached(slowKey, "/sf") { root =>
+        started.countDown()
+        release.await()
+        root.toString
+      }
+      ()
+    })
+    slow.start()
+    try {
+      assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the slow build must start")
+      // the other key's build runs on its own thread so a blocked call
+      // fails the test instead of hanging it
+      val other = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+        GateFixture.cached(s"gfspec_fast_${System.nanoTime()}", "/sf")(_.toString))
+      val got = other.get(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(got.nonEmpty && slow.isAlive,
+        "the second key built while the first key's build was still running")
+    } finally {
+      release.countDown()
+      slow.join(30000)
+    }
+  }
 }

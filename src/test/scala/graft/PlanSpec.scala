@@ -448,7 +448,7 @@ class PlanSpec extends SparkSuite {
     // EQUAL the direct estimates, not merely approximate them
     val merged = graft.sources.PartitionedLayout
       .mergedWeeklyEstimates(
-        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(sf)))
+        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(spark, sf)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(merged === direct,
       s"storage round-trip + union must be the identity on HLL state: $merged vs $direct")
@@ -507,14 +507,12 @@ class PlanSpec extends SparkSuite {
     // stronger than q102's estimate-equality: histogram merge is exact
     // integer addition, so the maintained store must be IDENTICAL as a
     // (day, bucket, cnt) set to the batch build under any slicing
-    graft.streaming.StreamingOracle.streamingHistogramMaintain(spark, sf).collect()
-    graft.sources.PartitionedLayout.quantileHistogramRollup(spark, sf).collect()
     def rowsOf(store: DataFrame) = store
       .select(col("day").cast("string"), col("bucket"), col("cnt"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val streamed = rowsOf(graft.etl.SnapshotMerge.read(spark,
-      graft.streaming.StreamingOracle.lastHistStoreDir.get))
-    val batch = rowsOf(spark.read.parquet(graft.sources.PartitionedLayout.histStoreDir(sf)))
+      graft.streaming.StreamingOracle.maintainedStores(spark, sf)._2))
+    val batch = rowsOf(spark.read.parquet(graft.sources.PartitionedLayout.histStoreDir(spark, sf)))
     assert(streamed === batch,
       s"exact-addition merge must land on the identical store: ${
         (streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
@@ -611,14 +609,13 @@ class PlanSpec extends SparkSuite {
     val out = graft.streaming.StreamingOracle.streamingSketchMaintain(spark, sf).collect()
     assert(out.nonEmpty && out.forall(_.getBoolean(2)),
       s"approx_ok must hold on the stream-maintained store: ${out.mkString}")
-    graft.sources.PartitionedLayout.sketchTableRollup(spark, sf).collect()
     val streamed = graft.sources.PartitionedLayout
       .mergedWeeklyEstimates(graft.etl.SnapshotMerge.read(spark,
-        graft.streaming.StreamingOracle.lastSketchStoreDir.get))
+        graft.streaming.StreamingOracle.maintainedStores(spark, sf)._1))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.sources.PartitionedLayout
       .mergedWeeklyEstimates(
-        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(sf)))
+        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(spark, sf)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed === batch,
       s"stream-maintained store must equal the batch build: $streamed vs $batch")

@@ -261,8 +261,7 @@ class StreamingSpec extends SparkSuite {
     // the exactness claim of q68/q69 rests on >1 micro-batch actually
     // occurring under that sizing
     val sf = sfDir("0.001")
-    graft.sources.PartitionedLayout.partitionedEvents(spark, sf)
-    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(sf)
+    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(spark, sf)
     val mft = StreamingOracle.mftFor(spark, dir)
     val schema = spark.read.parquet(dir).schema
     val src = spark.readStream.schema(schema)
@@ -350,8 +349,7 @@ class StreamingSpec extends SparkSuite {
 
     // and the per-batch physical plan really runs BroadcastAsOfJoinExec
     // with no stream-side exchange (memory sink; same source shape)
-    graft.sources.PartitionedLayout.partitionedEvents(spark, sf)
-    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(sf)
+    val dir = graft.sources.PartitionedLayout.partitionedEventsDir(spark, sf)
     val schema = spark.read.parquet(dir).schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", StreamingOracle.mftFor(spark, dir).toString)
