@@ -2,109 +2,88 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped store of portable MinHash signatures per dataset
-  * directory — the batch analog of the signature TABLE a production dedup
-  * pipeline maintains: signatures are computed once per corpus snapshot
-  * and every consumer (removal filter, clustering, leakage-safe split,
-  * incremental batch dedup, candidate ranking) reads the store instead of
-  * re-deriving the shingle→md5 pipeline per query. At 100 TB that
-  * recomputation is the dominant dedup cost, which is exactly why real
-  * systems persist signatures next to the corpus; here the store is an
-  * in-session persist keyed by (session, dir), LRU-bounded like
-  * [[graft.Tables]]'s plan cache, evicted entries unpersisted.
+/** Store of the derived signature tables per dataset directory: the
+  * batch analog of the signature TABLE a production dedup pipeline
+  * keeps next to the corpus. Signatures are computed once per corpus
+  * snapshot and every consumer (removal filter, clustering,
+  * leakage-safe split, incremental batch dedup, candidate ranking) reads
+  * the table instead of re-deriving the shingle→md5 pipeline per query.
+  * At 100 TB that recomputation is the dominant dedup cost, which is
+  * exactly why real systems persist signatures next to the corpus.
+  *
+  * Each kind is a [[graft.GateFixture.table]]: derived and written as
+  * parquet once per (JVM, corpus dir), read back on every lookup. A
+  * lookup pins no plan, broadcast relation or cached block of the
+  * derivation, so the session's storage memory stays free for queries.
   *
   * Results are identical with or without the store (the pipeline is a
   * pure function of the corpus) — asserted in LlmSpec.
   */
 object SigStore {
 
-  // eight entries per (session, dir) — shingles, portable + native
-  // minhash, portable + native simhash, scored candidates, truth pairs,
-  // component labels — so the bound covers four concurrent
-  // (session, dir) combinations before evicting (eviction only costs a
-  // recompute, never correctness)
-  private val MaxEntries = 32
-  private val cache = new java.util.LinkedHashMap[(SparkSession, String), DataFrame](
-      16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
-      val evict = size() > MaxEntries
-      if (evict) e.getValue.unpersist(blocking = false)
-      evict
-    }
-  }
-
   /** Raw word-3-gram shingle rows (doc_id, sh) — the stage BELOW the
     * signatures, shared by the exact-verify (l04) and truth-universe
     * (l44) pipelines that need the shingle sets themselves. */
   def shingles(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "shingles:" + dir,
-      () => TextDedup.portableShingles(graft.Tables.documents(spark, dir)))
+    table(spark, dir, "shingles")(
+      TextDedup.portableShingles(graft.Tables.documents(spark, dir)))
 
   /** Portable md5-substring MinHash signatures (doc_id, sig) for the
-    * `documents` table under `dir`, persisted for the session. Computed
-    * in one map-side pass by the native [[graft.plans.MinHashMd5]]
-    * expression (shingling inside the expression is cheap string
-    * concatenation; the digests dominate and their count is identical),
-    * so the store no longer derives from the exploded shingle frame —
-    * that frame remains for the consumers that need shingle ROWS
-    * (l04's exact verify, the truth universe). */
+    * `documents` table under `dir`. Computed in one map-side pass by the
+    * native [[graft.plans.MinHashMd5]] expression (shingling inside the
+    * expression is cheap string concatenation; the digests dominate and
+    * their count is identical), so the store does not derive from the
+    * exploded shingle frame — that frame remains for the consumers that
+    * need shingle ROWS (l04's exact verify, the truth universe). */
   def portable(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "portable:" + dir,
-      () => TextDedup.withPortableSignatures(graft.Tables.documents(spark, dir)))
+    table(spark, dir, "portable")(
+      TextDedup.withPortableSignatures(graft.Tables.documents(spark, dir)))
 
   /** Native xxhash64 MinHash signatures — the fast tier's store (l02's
     * detection pass and l47's agreement audit read the same table). */
   def native(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "native:" + dir,
-      () => TextDedup.withNativeSignatures(graft.Tables.documents(spark, dir)))
+    table(spark, dir, "native")(
+      TextDedup.withNativeSignatures(graft.Tables.documents(spark, dir)))
 
   /** Portable md5-bit SimHash fingerprints (l24's ranking and l48's
     * recall audit read the same table). */
   def simhashFp(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "simfp:" + dir,
-      () => TextDedup.portableSimhashFp(graft.Tables.documents(spark, dir)))
+    table(spark, dir, "simfp")(
+      TextDedup.portableSimhashFp(graft.Tables.documents(spark, dir)))
 
   /** Native xxhash64 SimHash fingerprints — the fast simhash tier (l03). */
   def nativeSimhash(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "nsimfp:" + dir,
-      () => TextDedup.nativeSimhashFp(graft.Tables.documents(spark, dir)))
+    table(spark, dir, "nsimfp")(
+      TextDedup.nativeSimhashFp(graft.Tables.documents(spark, dir)))
 
   /** Portable scored candidate pairs at the default bucket cap — one
-    * band join + scoring per (session, corpus), read by removal (l17),
-    * clustering (l26/l29), ranking (l28), the source matrix (l45), and
-    * the agreement audit (l47). Derived from the portable signature
-    * store, so the whole chain computes once. */
+    * band join + scoring per corpus, read by removal (l17), clustering
+    * (l26/l29), ranking (l28), the source matrix (l45), and the
+    * agreement audit (l47). Derived from the portable signature table,
+    * so the whole chain computes once. */
   def portableCands(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "pcands:" + dir,
-      () => TextDedup.portableScoredCandidates(portable(spark, dir)))
+    table(spark, dir, "pcands")(
+      TextDedup.portableScoredCandidates(portable(spark, dir)))
 
   /** The exact-Jaccard ground-truth pair universe over the rare-shingle
     * prune — read by both recall audits (l44, l48). Derived from the
-    * shingle store. */
+    * shingle table. */
   def truth(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "truth:" + dir,
-      () => TextDedup.truthPairs(shingles(spark, dir)))
+    table(spark, dir, "truth")(TextDedup.truthPairs(shingles(spark, dir)))
 
   /** Propagated near-dup component labels (id, comp) at the default
     * knobs (est. Jaccard ≥ 0.5, default bucket cap) — the min-label
     * propagation is rounds of shuffles over the candidate graph, so
     * clustering (l26) and the leakage-safe split (l29) share one run
-    * per (session, corpus). Derived from the candidate store. */
+    * per corpus. Derived from the candidate table. */
   def compLabels(spark: SparkSession, dir: String): DataFrame =
-    get(spark, "complabels:" + dir,
-      () => TextDedup.componentLabels(
+    table(spark, dir, "complabels")(
+      TextDedup.componentLabels(
         graft.Tables.documents(spark, dir), 0.5, TextDedup.MaxBucketDefault,
         sigsOpt = Some(portable(spark, dir)),
         candsOpt = Some(portableCands(spark, dir))))
 
-  private def get(spark: SparkSession, key: String,
-                  build: () => DataFrame): DataFrame = cache.synchronized {
-    var df = cache.get((spark, key))
-    if (df == null) {
-      df = build().persist()
-      cache.put((spark, key), df)
-    }
-    df
-  }
+  private def table(spark: SparkSession, dir: String, kind: String)(
+      derive: => DataFrame): DataFrame =
+    graft.GateFixture.table(spark, "graft_sig_" + kind, dir)(derive)
 }

@@ -290,7 +290,7 @@ object TextDedup {
     * explode + 16×MIN(substring(md5(…))) formulation (same digest, and
     * hex-min ≡ uint32-min; LlmSpec pins the equivalence against exactly
     * that pipeline). Registered queries share one computation per
-    * session via [[SigStore]]. */
+    * corpus via [[SigStore]]. */
   private[graft] def withPortableSignatures(documents: DataFrame): DataFrame =
     documents
       .select(col("doc_id"), expr("minhash_md5(split(text, ' '))").as("sig"))
@@ -798,24 +798,25 @@ object TextDedup {
     // takes min(own, neighbors') and the jump replaces comp by
     // label(comp) ≤ comp (labels(x) ≤ x holds from round 1 on) — and the
     // id set is fixed, so a round changed something iff the EXACT sum of
-    // comps dropped. One tiny aggregate over the already-materialized
-    // checkpoint replaces the old join-back + count job per round
-    // (decimal(38,0): exact at any node count, no wraparound ambiguity).
-    def checksum(labels: DataFrame): (java.math.BigDecimal, Long) = {
-      val r = labels.agg(
+    // comps dropped (decimal(38,0): exact at any node count, no
+    // wraparound ambiguity). The sum and the row count are observed
+    // metrics of the round's own localCheckpoint job, so a round is one
+    // action: no join-back + count job, no separate aggregate job.
+    def checkpoint(labels: DataFrame): (DataFrame, (java.math.BigDecimal, Long)) = {
+      val probe = org.apache.spark.sql.Observation()
+      val cp = labels.observe(probe,
         sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-        count(lit(1))).head()
-      (r.getDecimal(0), r.getLong(1))
+        count(lit(1))).localCheckpoint()
+      val r = scala.concurrent.Await.result(probe.future, scala.concurrent.duration.Duration("10 min"))
+      (cp, (r.getDecimal(0), r.getLong(1)))
     }
     // Round 1 fused: every neighbor's INITIAL label is its own id, so
     // the first propagation needs no label join — one aggregate computes
     // min(id, min(neighbor ids)) per node (edges carry both directions,
     // so the id_a side enumerates every node).
-    var labels = edges.groupBy(col("id_a"))
+    var (labels, prev) = checkpoint(jump(edges.groupBy(col("id_a"))
       .agg(min(col("id_b")).as("__nbr"))
-      .select(col("id_a").as("id"), least(col("id_a"), col("__nbr")).as("comp"))
-    labels = jump(labels).localCheckpoint()
-    var prev = checksum(labels)
+      .select(col("id_a").as("id"), least(col("id_a"), col("__nbr")).as("comp"))))
     var converged = false
     var iter = 1
     while (!converged && iter < 64) {
@@ -824,8 +825,7 @@ object TextDedup {
         .select(col("id_a").as("id"), col("comp"))
       val folded = labels.union(fromNbr)
         .groupBy("id").agg(min(col("comp")).as("comp"))
-      val next = jump(folded).localCheckpoint()
-      val s = checksum(next)
+      val (next, s) = checkpoint(jump(folded))
       converged = s == prev
       prev = s
       labels = next // superseded checkpoints are reclaimed by the ContextCleaner

@@ -700,12 +700,9 @@ object AsOfJoin {
     // left-global short-circuit (the r13 skip) — there the wall clock
     // is unchanged (the scan ran in parallel) and the uniformly salted
     // join about to run dwarfs one sampled pruned scan.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // dedicated pool for the blocking stats actions (r14 ADVICE) — see
-    // RangeJoin.statsEc
-    import RangeJoin.statsEc
-    val rightSide: Future[(RangeJoin.HotStats, DataFrame, Double)] = Future {
+    // on the stats pool, under this thread's job group and op tag — see
+    // RangeJoin.statsFuture
+    val rightSide = RangeJoin.statsFuture(right) {
       def build(frac: Double): DataFrame = {
         // __w: the measured width of what the right actually SHIPS into
         // the exec (key+ts+payload) — string payloads priced at their
@@ -733,7 +730,7 @@ object AsOfJoin {
       } else (s0, c0, sampleFraction)
     }
     def awaitRight(): (RangeJoin.HotStats, DataFrame, Double) =
-      Await.result(rightSide, Duration.Inf)
+      RangeJoin.await(rightSide)
     // sampled key column of the fact side (on THIS thread, concurrent
     // with the right pipeline): the tiny-cutoff count and the hot-key
     // histogram share one pruned sampled scan, and the count rides the
@@ -810,17 +807,15 @@ object AsOfJoin {
       // and stay pinned in executor storage (r14 ADVICE): unpersist the
       // pipeline's own cache the moment it completes — a reader racing
       // the unpersist just recomputes, and the frame is never read here
-      rightSide.onComplete {
-        case scala.util.Success((_, cached, _)) => cached.unpersist(false)
-        case _ => ()
-      }
+      rightSide.thenAccept { case (_, cached, _) => cached.unpersist(false); () }
       // receipt dims: the global form salts at saltBuckets (known
       // without the right pipeline). premiumBytes = whole right side
       // × (saltBuckets − 1) — priced OPPORTUNISTICALLY from the right
       // pipeline only if it already finished (the short-circuit's
       // whole point is not to await it; an unpriced 0 is the
       // documented fallback, never a blocking stats job).
-      val rPremium = rightSide.value.flatMap(_.toOption).map {
+      val rightDone = rightSide.isDone && !rightSide.isCompletedExceptionally
+      val rPremium = Option.when(rightDone)(rightSide.join()).map {
         case (rs, _, rFrac) =>
           val total = if (rFrac >= 1.0) rs.sampledRows
             else math.round(rs.sampledRows / rFrac)

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, Executors}
+
+import org.apache.spark.sql.{classic, Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.Q
@@ -285,23 +288,33 @@ object RangeJoin {
     * narrow column's scan cost. */
   val StatsSampleFraction: Double = 0.1
 
-  /** Dedicated cached-thread-pool EC for the auto routers' concurrent
+  /** Dedicated cached thread pool for the auto routers' concurrent
     * stats pipelines (r14 ADVICE): the pipelines run BLOCKING Spark
-    * actions (persist/head/collect), and on
-    * `ExecutionContext.Implicits.global` — a fixed pool sized to the
-    * CPU count — several auto joins planning concurrently (plus the
-    * callers' own futures in the concurrent-receipt specs) can exhaust
-    * the pool and stall planning fleet-wide. A cached pool grows with
-    * demand, the threads are daemons (never block JVM exit), and the
-    * pipelines' jobs are driver-side metadata work, so unbounded growth
-    * is bounded in practice by the handful of concurrent auto plans. */
-  private[operators] implicit lazy val statsEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-auto-stats")
-        t.setDaemon(true)
-        t
-      }))
+    * actions, and a fixed pool sized to the CPU count can be exhausted
+    * by several auto joins planning concurrently. The threads are
+    * daemons, and growth is bounded in practice by the handful of
+    * concurrent auto plans. */
+  private lazy val statsPool: ExecutorService = Executors.newCachedThreadPool(r => {
+    val t = new Thread(r, "graft-auto-stats")
+    t.setDaemon(true)
+    t
+  })
+
+  /** Runs one stats pipeline on [[statsPool]] under the CALLER's Spark
+    * thread-locals: `SQLExecution.withThreadLocalCaptured` (the wrapper
+    * Spark's broadcast and subquery futures use) hands the pooled thread
+    * the caller's local properties (job group, job description,
+    * scheduler pool, op tag) and active session for the body. A pooled
+    * thread otherwise keeps the properties of the thread that created
+    * it: its jobs are charged to a stale query and escape the caller's
+    * `cancelJobGroup`. */
+  private[operators] def statsFuture[T](df: DataFrame)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(df.sparkSession.asInstanceOf[classic.SparkSession],
+      statsPool)(body)
+
+  /** The stats pipeline's value, or the exception its body threw. */
+  private[operators] def await[T](f: CompletableFuture[T]): T =
+    try f.get() catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
 
   /** What the absolute-volume gate decided for ONE hot key/bin, given
     * the two sides' projected pile bytes. `SplitA`/`SplitB` name the
@@ -909,14 +922,11 @@ object RangeJoin {
     // fixed — run them CONCURRENTLY (the as-of router's round-14
     // recipe; the point side is NOT launched before the tiny cutoff,
     // so the tiny path's cost stays one aggregate)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // dedicated pool for the blocking stats actions (r14 ADVICE) — see statsEc
     // interval-side histogram (tiny sample → the cache SWAPS to the
     // full frame — the stale sample is unpersisted and the redo's
     // frame is persisted, so the per-bin counts below read the rows
     // the histogram decided on without a second full scan)
-    val iSide = Future {
+    val iSide = statsFuture(intervals) {
       val iStats0 = hotValuesFromKeys(sampledBinKeys(mags, w, frac), hotShareThreshold)
       if (sampleFraction < 1.0 && iStats0.sampledRows < MinStatsRows) {
         mags.unpersist(false)
@@ -939,9 +949,9 @@ object RangeJoin {
     // micro-batch is bounded by maxFilesPerTrigger upstream rather
     // than by this join's salt.
     val pSide = if (!pointsMeasurable)
-      Future.successful((HotStats(Nil, 0.0, 0.0, 0L),
+      CompletableFuture.completedFuture((HotStats(Nil, 0.0, 0.0, 0L),
         points.sparkSession.range(0).select(col("id").as("__k")), 1.0))
-    else Future {
+    else statsFuture(points) {
       val pKeys0 = points
         .select(binIdx(magnitude(points, pointCol), w).as("__k"),
           measuredWidthCol(points, points.columns.toSeq).as("__w"))
@@ -955,8 +965,8 @@ object RangeJoin {
         (hotValuesFromKeys(full, hotShareThreshold), full, 1.0)
       } else (pStats0, pCache, sampleFraction)
     }
-    val (iStats, iKeys, iFraction) = Await.result(iSide, Duration.Inf)
-    val (pStats, pKeys, pFraction) = Await.result(pSide, Duration.Inf)
+    val (iStats, iKeys, iFraction) = await(iSide)
+    val (pStats, pKeys, pFraction) = await(pSide)
     val union = (iStats.hot ++ pStats.hot).distinct
     val maxShare = math.max(iStats.maxShare, pStats.maxShare)
     if (union.isEmpty)
@@ -982,9 +992,9 @@ object RangeJoin {
     val (iCounts, pCounts) =
       if (!gateActive) (Map.empty[Any, Long], Map.empty[Any, Long])
       else {
-        val iF = Future(keyCountsIn(iKeys, union))
-        val pF = Future(keyCountsIn(pKeys, union))
-        (Await.result(iF, Duration.Inf), Await.result(pF, Duration.Inf))
+        val iF = statsFuture(intervals)(keyCountsIn(iKeys, union))
+        val pF = statsFuture(points)(keyCountsIn(pKeys, union))
+        (await(iF), await(pF))
       }
     def estBytes(counts: Map[Any, Long], b: Any, fracUsed: Double, width: Long) =
       math.round(counts.getOrElse(b, 0L) / math.min(1.0, fracUsed)) * width
@@ -1154,9 +1164,6 @@ object RangeJoin {
     // stats phase's cost on fixture-scale inputs is per-job scheduling
     // floor, and max(sides) halves it; at production scale the scans
     // overlap instead of serializing).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // dedicated pool for the blocking stats actions (r14 ADVICE) — see statsEc
     def sideMags(df: DataFrame, s: String, e: String): (DataFrame, DataFrame) = {
       val m0 = df.filter(col(s) < col(e))
         .select(magnitude(df, s).as("__s"), magnitude(df, e).as("__e"),
@@ -1175,12 +1182,12 @@ object RangeJoin {
       (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1),
         if (r.isNullAt(2)) 0.0 else r.getDouble(2))
     }
-    val lSide = Future { val (m0, m) = sideMags(left, lStart, lEnd)
+    val lSide = statsFuture(left) { val (m0, m) = sideMags(left, lStart, lEnd)
       (m0, m, p95AndCount(m)) }
-    val rSide = Future { val (m0, m) = sideMags(right, rStart, rEnd)
+    val rSide = statsFuture(right) { val (m0, m) = sideMags(right, rStart, rEnd)
       (m0, m, p95AndCount(m)) }
-    val (lm0, lm, (lp95, ln, lMeasuredW)) = Await.result(lSide, Duration.Inf)
-    val (rm0, rm, (rp95, rn, rMeasuredW)) = Await.result(rSide, Duration.Inf)
+    val (lm0, lm, (lp95, ln, lMeasuredW)) = await(lSide)
+    val (rm0, rm, (rp95, rn, rMeasuredW)) = await(rSide)
     val w = binWidth.getOrElse(math.max(1L, math.max(
       lp95.getOrElse(DefaultBinMicros), rp95.getOrElse(DefaultBinMicros))))
     // tiny cutoff on the COMBINED side sizes: the overlap join shuffles
@@ -1215,10 +1222,10 @@ object RangeJoin {
         (hotValuesFromKeys(full, hotShareThreshold), full, 1.0)
       } else (s0, sampledBinKeys(m, w, fracEnd), sampleFraction)
     }
-    val lStatsF = Future(sideStats(lm, lm0, fractionalEnd(left, lEnd)))
-    val rStatsF = Future(sideStats(rm, rm0, fractionalEnd(right, rEnd)))
-    val (ls, lKeys, lFraction) = Await.result(lStatsF, Duration.Inf)
-    val (rs, rKeys, rFraction) = Await.result(rStatsF, Duration.Inf)
+    val lStatsF = statsFuture(left)(sideStats(lm, lm0, fractionalEnd(left, lEnd)))
+    val rStatsF = statsFuture(right)(sideStats(rm, rm0, fractionalEnd(right, rEnd)))
+    val (ls, lKeys, lFraction) = await(lStatsF)
+    val (rs, rKeys, rFraction) = await(rStatsF)
     val hot = (ls.hot ++ rs.hot).distinct
     val maxShare = math.max(ls.maxShare, rs.maxShare)
     if (hot.isEmpty)
@@ -1239,9 +1246,9 @@ object RangeJoin {
     val (lCounts, rCounts) =
       if (taskAbsorbBytes <= 0L) (Map.empty[Any, Long], Map.empty[Any, Long])
       else {
-        val lF = Future(keyCountsIn(lKeys, hot))
-        val rF = Future(keyCountsIn(rKeys, hot))
-        (Await.result(lF, Duration.Inf), Await.result(rF, Duration.Inf))
+        val lF = statsFuture(left)(keyCountsIn(lKeys, hot))
+        val rF = statsFuture(right)(keyCountsIn(rKeys, hot))
+        (await(lF), await(rF))
       }
     def estBytes(counts: Map[Any, Long], b: Any, fracUsed: Double, width: Long) =
       math.round(counts.getOrElse(b, 0L) / math.min(1.0, fracUsed)) * width

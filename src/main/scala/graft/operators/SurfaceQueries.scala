@@ -611,43 +611,16 @@ object SurfaceQueries {
     fenceProbe(lineitem,
       exactQuartilesCdf(lineitem, "l_returnflag", "l_extendedprice"))
 
-  // Session store of the exact quartile relation per (session, sfDir) —
+  // The exact quartile relation per sfDir, kept as a GateFixture table —
   // the SigStore pattern on the relational side: the CDF histogram is
   // the dominant cost of BOTH q57 (its fences) and q63 (the agreement
   // reference), and it's a pure group-cardinality-sized function of the
   // read-only fixture, exactly what a production system persists as a
   // statistics table next to the data. Results are byte-identical with
-  // or without the store. LRU-bounded; evicted entries unpersisted.
-  private val MaxQuartileEntries = 8
-  private val quartileCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
-        val evict = size() > MaxQuartileEntries
-        // the evicted entry's session may already be stopped (multi-
-        // session JVM): its cache blocks died with the context, and an
-        // unpersist would throw from inside put()
-        if (evict && !e.getKey._1.sparkContext.isStopped)
-          try e.getValue.unpersist(blocking = false)
-          catch { case _: IllegalStateException => () }
-        evict
-      }
-    }
+  // or without the store.
   private def exactQuartileStore(spark: SparkSession, sfDir: String): DataFrame =
-    quartileCache.synchronized {
-      // stopped sessions' entries are dead weight (their cached blocks
-      // died with the context) — drop them now rather than letting them
-      // pin DataFrames until LRU age-out
-      val it = quartileCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-      var df = quartileCache.get((spark, sfDir))
-      if (df == null) {
-        df = exactQuartilesCdf(Tables.lineitem(spark, sfDir),
-          "l_returnflag", "l_extendedprice").persist()
-        quartileCache.put((spark, sfDir), df)
-      }
-      df
-    }
+    graft.GateFixture.table(spark, "graft_quartiles_q57", sfDir)(
+      exactQuartilesCdf(Tables.lineitem(spark, sfDir), "l_returnflag", "l_extendedprice"))
 
   /** The shared second pass of q57/q63: broadcast the group-cardinality
     * fence relation and count/total the rows beyond the upper fence in
@@ -697,7 +670,7 @@ object SurfaceQueries {
     def fence(q1: Column, q3: Column): Column = q3 + (q3 - q1) * 1.5
     val lineitem = Tables.lineitem(spark, sfDir)
     // ONE scan: the approx sketch and the group counts ride the same
-    // aggregation; the exact side is the 4-row session store joined in
+    // aggregation; the exact side is the 4-row quartile store joined in
     val approx = lineitem
       .groupBy("l_returnflag")
       .agg(

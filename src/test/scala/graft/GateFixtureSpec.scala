@@ -120,4 +120,19 @@ class GateFixtureSpec extends SparkSuite {
       slow.join(30000)
     }
   }
+
+  test("a second call site under a used name fails loudly, naming both sites") {
+    val key = s"gfspec_site_${System.nanoTime()}"
+    def first(): String = GateFixture.cached(key, "/sf")(_.toString)
+    def second(): Int = GateFixture.cached(key, "/sf")(_ => 42)
+    val built = first()
+    assert(first() === built, "the same site keeps reading its own fixture")
+    val e = intercept[IllegalStateException](second())
+    assert(e.getMessage.contains(key), e.getMessage)
+    assert(e.getMessage.contains("GateFixtureSpec.scala:") &&
+      e.getMessage.split("GateFixtureSpec.scala:").length === 3,
+      s"both call sites must be named: ${e.getMessage}")
+    // the same name under another sfDir is another fixture
+    assert(GateFixture.cached(key, "/other")(_ => 7) === 7)
+  }
 }

@@ -10,6 +10,33 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   /** Fixture dir for a scale factor, e.g. `sfDir("0.001")`. */
   protected def sfDir(sf: String): String = s"${SparkSuite.testData}/sf$sf"
   override def afterAll(): Unit = () // session shared across suites
+
+  /** The local properties of every Spark job started while `body` runs,
+    * in start order. A marker job runs after `body`; the listener bus
+    * delivers in order, so once the marker is seen every job of `body`
+    * has been recorded. */
+  protected def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties()))
+    }
+    val marker = s"marker_${System.nanoTime()}"
+    def isMarker(p: java.util.Properties) = p.getProperty("graft.test.marker") == marker
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.test.marker", marker)
+      try spark.range(1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(isMarker), "the marker job was never seen")
+      seen.asScala.toSeq.takeWhile(!isMarker(_))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSuite {

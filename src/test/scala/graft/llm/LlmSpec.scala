@@ -360,6 +360,34 @@ class LlmSpec extends SparkSuite {
     assert(labels.values.forall(_ == 1L), "every node reaches the path minimum")
   }
 
+  test("label propagation runs one action per round: the convergence checksum rides the checkpoint") {
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    val p0 = (1L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    spark.listenerManager.register(listener)
+    val jobs = try jobsDuring(TextDedup.propagateMinLabels(p0))
+      finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val names = actions.asScala.toSeq.filter(_ != "count") // the marker job's action
+    val perExecution = jobs.groupBy(_.getProperty("spark.sql.execution.root.id"))
+      .toSeq.sortBy(_._1.toLong).map(_._2.size)
+    assert(names.nonEmpty && names.forall(_ == "localCheckpoint"),
+      s"every action of the propagation is a round's checkpoint: $names")
+    assert(perExecution.size === names.size, "no job runs outside a checkpoint")
+    // the edge list's checkpoint, the fused first round, then the
+    // pointer-jumping rounds: the convergence probe adds no job to any
+    assert(perExecution.take(2) === Seq(1, 3) && perExecution.drop(2).forall(_ == 4),
+      s"jobs per checkpoint: $perExecution")
+  }
+
   test("rolling_min_hash matches a brute-force reference on edge cases") {
     def brute(s: String, w: Int): Long = {
       val bytes = s.getBytes("UTF-8")
@@ -758,15 +786,23 @@ class LlmSpec extends SparkSuite {
 
   test("signature store is shared per session and changes no results") {
     val dir = sfDir("0.001")
-    assert(SigStore.portable(spark, dir) eq SigStore.portable(spark, dir),
-      "repeat lookups must hit the same persisted frame")
+    // built once: a repeat lookup reads the same stored files and runs
+    // no job (no rebuild, no schema inference)
+    def builtOnce(lookup: => org.apache.spark.sql.DataFrame): Unit = {
+      val first = lookup.inputFiles.toSet
+      var again = Set.empty[String]
+      val jobs = jobsDuring { again = lookup.inputFiles.toSet }
+      assert(first.nonEmpty && again === first, "repeat lookups must read the same stored table")
+      assert(jobs.isEmpty, s"a repeat lookup must not rebuild the table: ${jobs.size} jobs")
+    }
+    builtOnce(SigStore.portable(spark, dir))
     val documents = graft.Tables.documents(spark, dir)
     val fromStore = TextDedup.incrementalDedup(documents,
       sigsOpt = Some(SigStore.portable(spark, dir))).collect().map(_.toSeq).toSeq
     val recomputed = TextDedup.incrementalDedup(documents).collect().map(_.toSeq).toSeq
     assert(fromStore === recomputed, "the store is a pure cache, not a semantic change")
     // the native (fast-tier) store obeys the same contract
-    assert(SigStore.native(spark, dir) eq SigStore.native(spark, dir))
+    builtOnce(SigStore.native(spark, dir))
     val fastFromStore = TextDedup.minhashNearDup(documents,
       sigsOpt = Some(SigStore.native(spark, dir))).collect().map(_.toSeq).toSeq
     val fastRecomputed = TextDedup.minhashNearDup(documents).collect().map(_.toSeq).toSeq
@@ -777,7 +813,7 @@ class LlmSpec extends SparkSuite {
     val compRecomputed = TextDedup.dupComponents(documents).collect().map(_.toSeq).toSeq
     assert(compFromStore === compRecomputed)
     // and the propagated-label frame obeys the same contract
-    assert(SigStore.compLabels(spark, dir) eq SigStore.compLabels(spark, dir))
+    builtOnce(SigStore.compLabels(spark, dir))
     val labelsFromStore = TextDedup.dupComponents(documents,
       labelsOpt = Some(SigStore.compLabels(spark, dir))).collect().map(_.toSeq).toSeq
     assert(labelsFromStore === compRecomputed)

@@ -827,6 +827,82 @@ class RangeJoinSpec extends SparkSuite {
     assert(decUni.mode === "plain", s"the uniform call's receipt must not ($decUni)")
   }
 
+  /** (job group, job description, test tag) of every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[(String, String, String)] =
+    try jobsDuring(body).map(p => (p.getProperty("spark.jobGroup.id"),
+      p.getProperty("spark.job.description"), p.getProperty("graft.test.tag")))
+    finally spark.sparkContext.clearJobGroup()
+
+  test("auto routers' stats jobs carry the caller's job group, description and local properties") {
+    val sc = spark.sparkContext
+    val ev = Tables.events(spark, sf)
+    val pts = ev.select(col("event_id"), col("ts"), col("value"))
+    val skew = RangeJoin.skewedWindows(ev)
+    val (l, r) = RangeJoin.burstOverlapSides(ev)
+    val evU = ev.select("event_id", "event_type", "user_id", "ts")
+    val rightU = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("event_id").as("pid"))
+    val routers: Seq[(String, () => Unit)] = Seq(
+      "asofJoinAuto" -> (() => AsOfJoin.asofJoinAutoStats(evU, rightU, "user_id", "ts",
+        Seq("pid"))),
+      "pointInIntervalAuto" -> (() => RangeJoin.pointInIntervalAutoStats(
+        pts, "ts", skew, "w_start", "w_end", minFullRows = 0L, taskAbsorbBytes = 0L)),
+      "intervalOverlapAuto" -> (() => RangeJoin.intervalOverlapAutoStats(
+        l, "w_start", "w_end", r, "e_start", "e_end", minFullRows = 0L,
+        taskAbsorbBytes = 0L)))
+    // a first round under another group: the stats pool's threads exist
+    // (and remember that group) before the measured calls
+    sc.setJobGroup("stale_group", "stale description")
+    sc.setLocalProperty("graft.test.tag", "stale")
+    routers.foreach(_._2())
+    sc.setLocalProperty("graft.test.tag", null)
+    sc.clearJobGroup()
+    routers.foreach { case (name, run) =>
+      val g = s"router_${name}_${System.nanoTime()}"
+      val jobs = jobsOf {
+        sc.setJobGroup(g, s"$name description")
+        sc.setLocalProperty("graft.test.tag", name)
+        try run() finally sc.setLocalProperty("graft.test.tag", null)
+      }
+      assert(jobs.nonEmpty, s"$name launched no stats job")
+      assert(jobs.forall(_ == ((g, s"$name description", name))),
+        s"$name: every stats job must carry the caller's group, description and tag: $jobs")
+    }
+  }
+
+  test("cancelJobGroup reaches an auto router's stats pass in flight") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // the overlap router runs every stats job on the pool; a sleeping
+    // UDF holds each one open long enough for the cancel to land
+    val slow = udf((x: Long) => { Thread.sleep(10); x })
+    val left = spark.range(0, 200, 1, 2).select(slow(col("id")).as("s"))
+      .select(col("s"), (col("s") + 5).as("e"))
+    val right = spark.range(0, 200, 1, 2).select(col("id").as("s2"), (col("id") + 3).as("e2"))
+    val g = s"router_cancel_${System.nanoTime()}"
+    val cancelled = new java.util.concurrent.atomic.AtomicInteger(0)
+    val canceller = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == g) {
+          cancelled.incrementAndGet()
+          sc.cancelJobGroup(g)
+        }
+    }
+    sc.addSparkListener(canceller)
+    try {
+      sc.setJobGroup(g, "cancel me")
+      val e = intercept[org.apache.spark.SparkException] {
+        RangeJoin.intervalOverlapAutoStats(left, "s", "e", right, "s2", "e2",
+          sampleFraction = 1.0, minFullRows = 0L, taskAbsorbBytes = 0L)
+      }
+      assert(e.getMessage.contains("cancel"), e.getMessage)
+      assert(cancelled.get() > 0, "the cancelled job carried the caller's group")
+    } finally {
+      sc.removeSparkListener(canceller)
+      sc.clearJobGroup()
+    }
+  }
+
   test("classifyPile (r15): hysteresis band, derived dims, and the priced both-overflow class") {
     import RangeJoin.{classifyPile, PileClass}
     val B = 10000L
