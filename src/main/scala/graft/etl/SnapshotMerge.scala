@@ -23,6 +23,13 @@ import graft.sources.CommitMarker
   *   store/_GRAFT_EPOCH_7                         // CommitMarker claim files
   * }}}
   *
+  * Every publish writes each partition version it touches as ONE file
+  * set laid out by [[binned]]: ⌈bytes / 128 MiB⌉ files written by as
+  * many parallel tasks, sized from the base manifest's [[PartStats]]
+  * plus the source's per-partition rows. A partition below the target is
+  * one file, whatever the partitioning of the frame that fed the MERGE;
+  * [[compact]] uses the same layout at its own target.
+  *
   * Why this shape and not a full-copy snapshot per commit (fine for
   * small marts, fatal at 100 TB): this store re-writes only the
   * partitions a merge touches, publishes them as NEW `__e={epoch}`
@@ -60,9 +67,11 @@ import graft.sources.CommitMarker
   * read. Reads hand Spark the explicit partition-version directories
   * with `basePath`, so the partition column stays a partition column:
   * partition pruning and pushed filters behave exactly as on the plain
-  * layout. A MERGE costs one left-anti shuffle plus the rewrite of the
-  * touched partitions; publish adds one rename per touched partition and
-  * one manifest write.
+  * layout. A MERGE costs one metadata job (the touched partitions with
+  * the source's row count in each), then one write job: the left-anti
+  * shuffle over the touched partition versions only, plus the bin
+  * shuffle. Publish adds a footer-count job over the staged files, one
+  * rename per touched partition and one manifest write.
   *
   * Contract: single logical schema per store (the manifest carries it;
   * sources must present every store column). Vacuumed epochs stop being time-travelable; a reader pinned
@@ -363,26 +372,23 @@ object SnapshotMerge {
     val target = alignTo(targetRaw, source.schema)
     val keySet = deleteKeyRows.map(kr =>
       broadcast(kr.select(keys.map(col): _*).distinct()))
-    val sourceParts = source.select(partitionCol).distinct()
     val movedParts = target
       .join(source.select(keys.map(col): _*).distinct(), keys, "left_semi")
       .select(partitionCol).distinct()
     // delete keys touch the partitions currently holding their rows
     val deleteParts = keySet.map(ks =>
       target.join(ks, keys, "left_semi").select(partitionCol).distinct())
-    val touched = deleteParts.foldLeft(sourceParts.union(movedParts))(_ union _)
-      .distinct()
-    val affected = target.join(
-      broadcast(touched.withColumnRenamed(partitionCol, "__p")),
-      target(partitionCol) <=> col("__p"), "left_semi")
-    // deletions apply to the TARGET before the upsert union, so a key
-    // on both sides re-lands from the source (insert wins)
-    val kept = keySet.map(ks => affected.join(ks, keys, "left_anti"))
-      .getOrElse(affected)
-    val merged = Merge.upsert(kept, source, keys)
-    // partition METADATA (one value per touched partition, never data),
-    // collected before any publish step
-    val touchedVals = touched.collect().map(r => Option(r.get(0)).map(_.toString))
+    // partition METADATA (one row per touched partition, never data),
+    // collected before any publish step in ONE job: each touched value
+    // with the source's row count and raw bytes there, which size the
+    // publish's bins (moved-out and delete-only partitions carry 0)
+    val touched = (movedParts +: deleteParts.toSeq)
+      .map(_.select(col(partitionCol), lit(0L).as("__n"), lit(0L).as("__b")))
+      .foldLeft(source.groupBy(col(partitionCol))
+        .agg(count(lit(1)).as("__n"), sum(rawRowBytes(source.schema)).as("__b"))
+      )(_ unionByName _)
+      .groupBy(col(partitionCol)).agg(sum("__n"), sum("__b"))
+      .collect()
     // EMPTY batch against an existing store: nothing to stage — return
     // the current epoch instead of burning one (a recovery replay of a
     // delete-only batch whose keys were already removed would otherwise
@@ -395,10 +401,131 @@ object SnapshotMerge {
     // store schema even when the first batch carries zero rows.
     val widens = base.exists(s =>
       !source.schema.fieldNames.forall(s.schema.fieldNames.contains))
-    if (touchedVals.isEmpty && base.isDefined && !widens) return base.get.epoch
-    val touchedNames = touchedVals.map(partDirName(partitionCol, _)).toSet
+    if (touched.isEmpty && base.isDefined && !widens) return base.get.epoch
+    val sourceByName: Map[String, (Long, Long)] = touched.map(r =>
+      partDirName(partitionCol, Option(r.get(0)).map(_.toString)) ->
+        ((r.getLong(1), r.getLong(2)))).toMap
+    val touchedNames = sourceByName.keySet
+    // only the touched partition versions are read back for the rewrite:
+    // their directories are exactly the manifest entries this commit
+    // replaces, so no scan of the rest of the store (and no re-run of
+    // the touched-partition join) rides in the write
+    val affected = alignTo(base.map(s => readSnapshot(spark, store,
+        s.copy(parts = s.parts.filter(kv => touchedNames(kv._1)))))
+      .getOrElse(targetRaw), source.schema)
+    // deletions apply to the TARGET before the upsert union, so a key
+    // on both sides re-lands from the source (insert wins)
+    val kept = keySet.map(ks => affected.join(ks, keys, "left_anti"))
+      .getOrElse(affected)
+    val merged = Merge.upsert(kept, source, keys)
+    // bin sizes: the partition version's recorded bytes plus the source
+    // rows at its recorded density (bytes ÷ rows), or at their raw size
+    // where the base records none (a new or bootstrapped partition)
+    val binBytes = sourceByName.map { case (name, (n, rawBytes)) =>
+      val st = base.flatMap(_.stats.get(name))
+      name -> (st.map(_.bytes).getOrElse(0L) +
+        st.flatMap(s => s.rows.filter(_ > 0).map(r => (n * (s.bytes.toDouble / r)).toLong))
+          .getOrElse(rawBytes))
+    }
     publish(spark, store, base, claimFloor, merged, partitionCol,
-      touchedNames, merged.schema)
+      binBytes, publishTargetFileBytes, merged.schema)
+  }
+
+  /** A row's raw (uncompressed) size: the byte length of its string and
+    * binary values plus the fixed width of every other column. It sizes
+    * the bins of source rows landing where the store records no density. */
+  private def rawRowBytes(schema: StructType): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val (varying, fixed) = schema.fields.partition(f =>
+      f.dataType == StringType || f.dataType == BinaryType)
+    varying.map(f => coalesce(octet_length(col(f.name)), lit(0)).cast(LongType))
+      .foldLeft(lit(fixed.map(_.dataType.defaultSize.toLong).sum))(_ + _)
+  }
+
+  /** Target size of the files every publish other than [[compact]]
+    * writes ([[upsert]], [[applyChanges]] and the predicate rewrites);
+    * compact takes its own. Not an option: specs shrink it so a small
+    * fixture spans several bins. */
+  @volatile private[etl] var publishTargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** THE bin layout of every publish. Partition `p` (by manifest
+    * directory name), estimated at `bytesByName(p)` bytes, gets
+    * k_p = ⌈bytes / targetFileBytes⌉ bins (1 to 4096), numbered
+    * contiguously across partitions; a row lands in bin
+    * off_p + xxhash64(row) mod k_p, and each bin is a write task of its
+    * own. So a partition version is written as k_p files by k_p
+    * parallel tasks: one file below the target, a fan-out for a hot or
+    * freshly bootstrapped partition. The lookup travels in the task
+    * closure (no Spark job builds it), and each bin's shuffle key is
+    * picked so Spark's hash partitioning sends it to its own task (past
+    * 2^15 bins, tasks take several bins, contiguous bins of one
+    * partition never sharing one). A row whose partition value misses
+    * the lookup (a value/path formatting mismatch that slipped the
+    * path-stable type guard) is placed by hashing that value: that can
+    * misplace its bin, never lose the row. */
+  private[etl] def binned(rows: DataFrame, partitionCol: String,
+                          bytesByName: Map[String, Long],
+                          targetFileBytes: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    var off = 0
+    val bins: Seq[(Option[String], (Int, Int))] =
+      bytesByName.toSeq.sortBy(_._1).map { case (name, bytes) =>
+        val k = math.max(1L, math.min(4096L,
+          math.ceil(bytes.toDouble / targetFileBytes).toLong)).toInt
+        val vs = name.substring(name.indexOf('=') + 1)
+        val v =
+          if (vs == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None
+          else Some(ExternalCatalogUtils.unescapePathName(vs))
+        val entry = v -> ((off, k)); off += k; entry
+      }
+    val totalBins = math.max(1, off)
+    val tasks = math.min(totalBins, 1 << 15)
+    val byValue: Map[String, (Int, Int)] = bins.collect { case (Some(v), b) => v -> b }.toMap
+    val nullBin: Option[(Int, Int)] = bins.collectFirst { case (None, b) => b }
+    val keys = slotKeys(tasks)
+    val slot = udf { (v: String, h: Long) =>
+      val bin = (if (v == null) nullBin else byValue.get(v)) match {
+        case Some((o, k)) => o + java.lang.Math.floorMod(h, k.toLong).toInt
+        case None => java.lang.Math.floorMod(if (v == null) 0 else v.hashCode, totalBins)
+      }
+      keys(bin % tasks)
+    }
+    // the row hash only matters where a partition spans several bins;
+    // map values cannot be hashed, so rows spread by their other columns
+    def hasMap(dt: DataType): Boolean = dt match {
+      case _: org.apache.spark.sql.types.MapType => true
+      case a: org.apache.spark.sql.types.ArrayType => hasMap(a.elementType)
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val hashable = rows.schema.fields.toIndexedSeq.filterNot(f => hasMap(f.dataType))
+    val rowHash =
+      if (bins.exists(_._2._2 > 1) && hashable.nonEmpty)
+        xxhash64(hashable.map(f => col(f.name)): _*)
+      else lit(0L)
+    rows.withColumn("__slot", slot(col(partitionCol).cast("string"), rowHash))
+      .repartition(tasks, col("__slot"))
+      .drop("__slot")
+  }
+
+  /** For each task t < n, a long key that Spark's hash partitioning into
+    * n tasks sends to task t, found with the partitioner's own
+    * partition-id expression (about n·ln n evaluations). */
+  private def slotKeys(n: Int): Array[Long] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val pid = HashPartitioning(Seq(BoundReference(0, LongType, nullable = false)), n)
+      .partitionIdExpression
+    val keys = Array.fill(n)(-1L)
+    var found = 0
+    var v = 0L
+    while (found < n) {
+      val t = pid.eval(InternalRow(v)).asInstanceOf[Int]
+      if (keys(t) < 0) { keys(t) = v; found += 1 }
+      v += 1
+    }
+    keys
   }
 
   /** Stage → physical claim → move in → MANIFEST CREATE-EXCLUSIVE — the
@@ -435,10 +562,12 @@ object SnapshotMerge {
       claimFloor: Long,
       rows: DataFrame,
       partitionCol: String,
-      touchedNames: Set[String],
+      binBytes: Map[String, Long],
+      targetFileBytes: Long,
       schema: StructType,
       dataChange: Boolean = true,
       writeOptions: Map[String, String] = Map.empty): Long = {
+    val touchedNames = binBytes.keySet
     val storePath = new Path(store)
     val fs = fsOf(spark, storePath)
     val staging = store.stripSuffix("/") + "__staging_" +
@@ -458,7 +587,8 @@ object SnapshotMerge {
     // grace-sensitive window by a whole Spark job).
     val (stagedDirs, stagedStats) =
       try {
-        rows.write.mode(SaveMode.Overwrite).options(writeOptions)
+        binned(rows, partitionCol, binBytes, targetFileBytes)
+          .write.mode(SaveMode.Overwrite).options(writeOptions)
           .partitionBy(partitionCol).parquet(staging)
         val dirs = fs.listStatus(stagingPath).filter(_.isDirectory)
         // Per-partition ROW counts from the just-staged files' parquet
@@ -1060,8 +1190,13 @@ object SnapshotMerge {
       val in = if (nonNull.nonEmpty) col(partitionCol).isin(nonNull: _*) else lit(false)
       if (nonNull.length < touchedVals.length) in || col(partitionCol).isNull else in
     }
+    // a rewrite only shrinks or keeps its partitions: their recorded
+    // bytes size the bins (0 where a pre-stats entry records none)
+    val binBytes = touchedNames.iterator
+      .map(n => n -> base.stats.get(n).map(_.bytes).getOrElse(0L)).toMap
     Some(publish(spark, store, Some(base), claimFloor,
-      rewrite(snap.filter(prune)), partitionCol, touchedNames, base.schema))
+      rewrite(snap.filter(prune)), partitionCol, binBytes,
+      publishTargetFileBytes, base.schema))
   }
 
   /** S8 DELETE on the snapshot store (Delta DELETE parity — the
@@ -1308,12 +1443,14 @@ object SnapshotMerge {
   /** OPTIMIZE analog with snapshot isolation: rewrite the current
     * snapshot's most FRAGMENTED partitions (file count above
     * `maxFilesPerPartition`) as a new epoch — BIN-PACKED output, no
-    * logical change, readers of prior epochs untouched. A long-running
-    * [[graft.streaming.Streams.snapshotMergeSink]] stream appends one
-    * file set per trigger per touched partition; this is the compaction
-    * that keeps read amplification bounded without stopping the stream
-    * (the manifest commit arbitrates against concurrent merges like any
-    * writer — a compact racing a merge aborts, never loses its rows).
+    * logical change, readers of prior epochs untouched. Every publish
+    * already writes its partition versions through the same bin layout
+    * ([[binned]], at 128 MiB), so on a store written by this code a
+    * partition fragments only when it outgrows its bins. Compact
+    * re-bins those, and stores written before publishes were binned
+    * (one file per write task and partition). The manifest commit
+    * arbitrates against concurrent merges like any writer — a compact
+    * racing a merge aborts, never loses its rows.
     *
     * Scale shape (r15 verdict #1/#2 — the two scale-killers of the v1
     * compact, both closed):
@@ -1327,14 +1464,14 @@ object SnapshotMerge {
     *  - '''Output is bin-packed to `targetFileBytes`, not
     *    one-file-per-partition.''' Each fragmented partition fans out
     *    into ⌈bytes / targetFileBytes⌉ hash bins (Delta OPTIMIZE's
-    *    contract) — a hot multi-GB partition rewrites in parallel
-    *    across its bins instead of sorting through ONE straggler task,
-    *    and no output file is an unsplittable giant. Bins are placed by
-    *    hashing the bin id; a rare same-partition bin collision merges
-    *    two bins into one task, so the hard per-file bound is enforced
-    *    independently by `maxRecordsPerFile` (target bytes ÷ measured
-    *    average row bytes) — file size is guaranteed by the writer,
-    *    bins only buy parallelism. The per-partition row counts behind
+    *    contract), each written by its own task ([[binned]]) — a hot
+    *    multi-GB partition rewrites in parallel across its bins instead
+    *    of sorting through ONE straggler task, and no output file is an
+    *    unsplittable giant. Rows spread over a partition's bins by hash,
+    *    so a bin only holds about bytes ÷ k; the hard per-file bound
+    *    is enforced independently by `maxRecordsPerFile` (target bytes ÷
+    *    measured average row bytes) — file size is guaranteed by the
+    *    writer, bins only buy parallelism. The per-partition row counts behind
     *    the caps come from the manifest's `partv3` stats (observed once
     *    at publish time from the staged footers) — planning reads zero
     *    files on a partv3 store; only pre-partv3 entries fall back to
@@ -1399,8 +1536,7 @@ object SnapshotMerge {
     // (r16 verdict #1: one corpus-average cap let a wide-row partition
     // overshoot targetFileBytes by the width ratio whenever fragmented
     // partitions' row widths differed). A cap only BINDS when the
-    // partition spans multiple bins or a same-partition bin collision
-    // merges two bins into one task — a partition whose whole data fits
+    // partition spans multiple bins — a partition whose whole data fits
     // one target file (bytes <= targetFileBytes, one bin) writes one
     // bounded file with no cap at all.
     val capOf: Map[String, Long] = fragmented.keys.map { name =>
@@ -1436,8 +1572,6 @@ object SnapshotMerge {
     val groups: Seq[(Seq[String], Option[Long])] =
       (if (unconstrained.nonEmpty) Seq((unconstrained.sorted, None)) else Nil) ++
         constrainedGroups
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val dataCols = base.schema.fieldNames.toIndexedSeq.map(col)
     var committed: Option[Long] = None
     groups.foreach { case (group, cap) =>
       // each group commits its own compact epoch — re-read the tip so a
@@ -1449,47 +1583,10 @@ object SnapshotMerge {
       if (live.nonEmpty) {
         val rows = readSnapshot(spark, store,
           base.copy(parts = live.map(n => n -> fragmented(n)).toMap))
-        // bin layout: contiguous global bin ids per partition, k_p each
-        val binOf: Map[String, (Long, Int)] = {
-          var off = 0L
-          live.sorted.map { name =>
-            val k = math.max(1, math.min(4096,
-              math.ceil(measured(name).bytes.toDouble / targetFileBytes).toInt))
-            val entry = name -> ((off, k)); off += k; entry
-          }.toMap
-        }
-        val totalBins = binOf.values.iterator.map(_._2.toLong).sum
-        val lookupRows = binOf.toSeq.map { case (name, (off, k)) =>
-          val vs = name.substring(name.indexOf('=') + 1)
-          val v: String =
-            if (vs == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-            else ExternalCatalogUtils.unescapePathName(vs)
-          Row(v, off, k)
-        }
-        val lookup = spark.createDataFrame(
-          spark.sparkContext.parallelize(lookupRows, 1),
-          StructType(Seq(
-            org.apache.spark.sql.types.StructField("__pv",
-              org.apache.spark.sql.types.StringType, nullable = true),
-            org.apache.spark.sql.types.StructField("__off", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("__k",
-              org.apache.spark.sql.types.IntegerType, nullable = false))))
-        // left join + hash fallback: a value-formatting mismatch can only
-        // misplace a row's BIN (sizing), never lose the row
-        val binned = rows
-          .join(broadcast(lookup),
-            rows(partitionCol).cast("string") <=> col("__pv"), "left_outer")
-          .withColumn("__gbin",
-            when(col("__k").isNull, pmod(xxhash64(col(partitionCol)), lit(totalBins)))
-              .otherwise(col("__off") +
-                pmod(xxhash64(dataCols: _*), col("__k").cast("long"))))
-        // 2× headroom: distinct bins spread over 2·bins slots so a
-        // same-partition collision (two bins → one task) is the exception
-        val numTasks = math.max(1L, math.min(1L << 15, 2L * totalBins)).toInt
-        val compacted = binned.repartition(numTasks, col("__gbin")).select(dataCols: _*)
         committed = Some(publish(spark, store, Some(tip),
-          CommitMarker.currentEpoch(spark, store), compacted,
-          partitionCol, live.toSet, tip.schema, dataChange = false,
+          CommitMarker.currentEpoch(spark, store), rows, partitionCol,
+          live.map(n => n -> measured(n).bytes).toMap, targetFileBytes,
+          tip.schema, dataChange = false,
           writeOptions =
             cap.map(c => Map("maxRecordsPerFile" -> c.toString)).getOrElse(Map.empty)))
       }

@@ -152,7 +152,7 @@ object SnapshotStream {
           Seq("event_id"), "day")
         q.processAllAvailable()
       } finally q.stop()
-      StreamingOracle.record("q112", q.recentProgress)
+      StreamingOracle.record("q112", q)
       b
     }
 
@@ -254,7 +254,7 @@ object SnapshotStream {
         SnapshotMerge.deleteWhere(gs, up, col("event_id") % 10 === 4)
         q.processAllAvailable()
       } finally q.stop()
-      StreamingOracle.record("q116", q.recentProgress)
+      StreamingOracle.record("q116", q)
       feed
     }
 
@@ -374,7 +374,7 @@ object SnapshotStream {
       val withRows = q2.recentProgress.filter(_.numInputRows > 0)
       require(withRows.length == 1,
         s"the backlog must arrive as one batch, got ${withRows.length}")
-      StreamingOracle.record("q117", q1.recentProgress ++ q2.recentProgress)
+      StreamingOracle.record("q117", q1, q2)
       feed
     }
 
@@ -495,7 +495,7 @@ object SnapshotStream {
         .filter(col("event_id") % 10 === 6 && col("score").isNotNull)
         .count() == 0L,
         "epoch-2 scores flowed before the restart and must not be downstream")
-      StreamingOracle.record("q118", q1.recentProgress ++ q2.recentProgress)
+      StreamingOracle.record("q118", q1, q2)
       down
     }
 

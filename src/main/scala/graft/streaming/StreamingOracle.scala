@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.Det.{dsum, sqlDsum}
 
 /** Structured Streaming EXECUTION under the DuckDB oracle gate.
@@ -165,19 +165,30 @@ object StreamingOracle {
   private[graft] val gateReceipts =
     new java.util.concurrent.ConcurrentHashMap[String, GateReceipt]()
 
+  /** The state-store providers each gate's last run released in
+    * [[record]] — the spec hook proving none of them stays loaded. */
+  private[graft] val releasedProviders = new java.util.concurrent.ConcurrentHashMap[
+    String, Seq[org.apache.spark.sql.execution.streaming.state.StateStoreProviderId]]()
+
   /** Start the gate's stream, drain it, stop it; [[record]] it under
     * `gate`. */
   private def drain(gate: String)(start: => StreamingQuery): StreamingQuery = {
     val q = start
     try q.processAllAvailable() finally q.stop()
-    record(gate, q.recentProgress)
+    record(gate, q)
     q
   }
 
   /** Record a gate's trigger count and state-store receipt from its
-    * streams' progress (several streams' progress concatenated when the
-    * gate restarts its stream). */
-  private[streaming] def record(gate: String, prog: Array[StreamingQueryProgress]): Unit = {
+    * STOPPED streams' progress (several streams when the gate restarts
+    * its stream), then unload their state-store providers: a finished
+    * gate's state would otherwise stay loaded, rows and all, until
+    * Spark's maintenance pass notices the run is gone. */
+  private[streaming] def record(gate: String, qs: StreamingQuery*): Unit = {
+    val providers = qs.flatMap(org.apache.spark.sql.graft.StateBridge.providers)
+    org.apache.spark.sql.graft.StateBridge.unload(providers)
+    releasedProviders.put(gate, providers)
+    val prog = qs.flatMap(_.recentProgress)
     val triggers = prog.map(_.batchId).distinct.length
     val lastWithState = prog.reverse.find(_.stateOperators.nonEmpty)
     triggerCounts.put(gate, triggers)

@@ -180,6 +180,12 @@ object Streams {
     * identical logical content — which is what makes foreachBatch
     * exactly-once-per-key under at-least-once delivery.
     *
+    * One pass per trigger: the deduplicated batch is persisted once and
+    * released in a `finally`, so the emptiness probe, the upsert's
+    * touched-partition collect and its write all read that one
+    * materialization — the file scan, the dedup state and `keepLatest`
+    * run once per trigger, not once per action.
+    *
     * `vacuumKeep` bounds the history a LONG-RUNNING stream accrues: one
     * epoch per trigger means manifests and superseded partition
     * versions grow with trigger count, and the store-root listing every
@@ -200,24 +206,28 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val latest = graft.etl.Dedup.keepLatest(batch, keys, Seq(col(tsCol)))
-        // an empty trigger (restart bookkeeping) must not burn an epoch
-        if (!latest.isEmpty) {
-          val epoch = graft.etl.SnapshotMerge.upsert(
-            spark, targetDir, latest, keys, partitionCol)
-          // manifest-driven sweep per trigger: its cost scales with what
-          // the trigger superseded, not with table width; every
-          // `orphanSweepEvery`-th COMMITTED EPOCH also runs the
-          // full-walk pass — crashed publishes leave orphan version dirs
-          // no manifest references, and a sink that never walks would
-          // grow them unbounded over a long stream's crash history. The
-          // cadence keys on the store's own epoch number (durable,
-          // monotone), NOT a process counter: a crash-prone deployment
-          // restarting every few triggers would reset an in-memory
-          // counter forever (r16 review #2).
-          graft.etl.SnapshotMerge.vacuum(spark, targetDir, vacuumKeep, vacuumGraceMs,
-            sweepOrphans = orphanSweepEvery > 0 && epoch % orphanSweepEvery == 0)
-        }
+        // every action re-executes an unpersisted lineage (one pass
+        // per trigger, see above)
+        val latest = graft.etl.Dedup.keepLatest(batch, keys, Seq(col(tsCol))).persist()
+        try {
+          // an empty trigger (restart bookkeeping) must not burn an epoch
+          if (!latest.isEmpty) {
+            val epoch = graft.etl.SnapshotMerge.upsert(
+              spark, targetDir, latest, keys, partitionCol)
+            // manifest-driven sweep per trigger: its cost scales with what
+            // the trigger superseded, not with table width; every
+            // `orphanSweepEvery`-th COMMITTED EPOCH also runs the
+            // full-walk pass — crashed publishes leave orphan version dirs
+            // no manifest references, and a sink that never walks would
+            // grow them unbounded over a long stream's crash history. The
+            // cadence keys on the store's own epoch number (durable,
+            // monotone), NOT a process counter: a crash-prone deployment
+            // restarting every few triggers would reset an in-memory
+            // counter forever (r16 review #2).
+            graft.etl.SnapshotMerge.vacuum(spark, targetDir, vacuumKeep, vacuumGraceMs,
+              sweepOrphans = orphanSweepEvery > 0 && epoch % orphanSweepEvery == 0)
+          }
+        } finally { latest.unpersist(); () }
         ()
       }
 

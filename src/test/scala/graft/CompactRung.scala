@@ -45,7 +45,8 @@ object CompactRung {
     val template = root.resolve("template/store")
 
     // ~1 GB fat partition: high-entropy sha2 payloads parquet cannot
-    // compress away (~130 B/row on disk), written as ~40 files so the
+    // compress away (~130 B/row on disk), laid out as ~40 files (the way
+    // a publish wrote it before publishes were binned) so the
     // fragmentation probe fires; one small partition rides along to
     // prove untouched partitions stay untouched
     val fat = spark.range(1, rows + 1).select(
@@ -58,7 +59,7 @@ object CompactRung {
       .repartitionByRange(40, col("id"))
       .unionByName(spark.range(-100, 0).select(
         col("id"), lit("small").as("v"), lit("cold").as("day"), col("id").as("ts")))
-    SnapshotMerge.upsert(spark, template.toString, fat, Seq("id"), "day")
+    graft.etl.LegacyStore.fragmented(spark, template.toString, fat, "day")
     val snap = SnapshotMerge.latestSnapshot(spark, template.toString).get
     val fatBytes = snap.stats("day=hot").bytes
     println(s"# fixture: ${rows} rows, day=hot ${snap.stats("day=hot").files} files, " +

@@ -633,13 +633,13 @@ class SnapshotMergeSpec extends SparkSuite {
 
   test("compact: fragmented partitions rewrite to one file in a new epoch; logical rows unchanged; prior epochs intact") {
     val store = freshStore()
-    // bootstrap d1 FRAGMENTED: 20 rows range-spread over 10 write tasks
-    // → ~10 data files in d1's version; d2 gets one small file
+    // d1 FRAGMENTED as a pre-binning publish wrote it: 20 rows
+    // range-spread over 10 write tasks → ~10 data files in d1's version;
+    // d2 gets one small file
     val rows = (1 to 20).map(i => (i.toLong, s"v$i", "d1", i.toLong)) :+
       ((99L, "z", "d2", 0L))
-    SnapshotMerge.upsert(spark, store,
-      rows.toDF("id", "v", "day", "ts").repartitionByRange(10, col("id")),
-      Seq("id"), "day")
+    LegacyStore.fragmented(spark, store,
+      rows.toDF("id", "v", "day", "ts").repartitionByRange(10, col("id")), "day")
     def filesIn(part: String): Int = {
       val snap = SnapshotMerge.latestSnapshot(spark, store).get
       new java.io.File(store, s"$part/__e=${snap.parts(part)}").listFiles()
@@ -701,7 +701,8 @@ class SnapshotMergeSpec extends SparkSuite {
     val store = freshStore()
     // high-entropy payloads (sha2 hex) so parquet cannot compress the
     // fixture away: ~260 B/row on disk, 2 000 rows ≈ 500 KB in day=f1,
-    // written as 10 separate files (range-split) → fragmented
+    // laid out as a pre-binning publish wrote it: 10 separate files
+    // (range-split) → fragmented
     val n = 2000
     val fat = spark.range(1, n + 1)
       .select(col("id"),
@@ -711,7 +712,7 @@ class SnapshotMergeSpec extends SparkSuite {
           sha2(concat(col("id").cast("string"), lit("z")), 256)).as("v"),
         lit("f1").as("day"), col("id").as("ts"))
       .repartitionByRange(10, col("id"))
-    SnapshotMerge.upsert(spark, store, fat, Seq("id"), "day")
+    LegacyStore.fragmented(spark, store, fat, "day")
     val base = SnapshotMerge.latestSnapshot(spark, store).get
     assert(base.stats("day=f1").files >= 10, "fixture must be fragmented")
     val partBytes = base.stats("day=f1").bytes
@@ -761,11 +762,11 @@ class SnapshotMergeSpec extends SparkSuite {
     val thin = spark.range(1001, 2201).select(col("id"),
       substring(sha2(col("id").cast("string"), 256), 1, 24).as("v"),
       lit("t").as("day"), col("id").as("ts"))
-    // each side range-split on its own so BOTH partitions fragment
-    SnapshotMerge.upsert(spark, store,
+    // each side range-split on its own so BOTH partitions fragment (the
+    // layout a pre-binning publish wrote)
+    LegacyStore.fragmented(spark, store,
       wide.repartitionByRange(10, col("id"))
-        .unionByName(thin.repartitionByRange(10, col("id"))),
-      Seq("id"), "day")
+        .unionByName(thin.repartitionByRange(10, col("id"))), "day")
     val base = SnapshotMerge.latestSnapshot(spark, store).get
     assert(base.stats("day=w").files >= 8 && base.stats("day=t").files >= 8,
       s"fixture must be fragmented on both sides: ${base.stats}")
@@ -818,8 +819,8 @@ class SnapshotMergeSpec extends SparkSuite {
           sha2(concat(col("id").cast("string"), lit("y")), 256),
           sha2(concat(col("id").cast("string"), lit("z")), 256)).as("v"),
         lit("w").as("day"), col("id").as("ts"))
-      SnapshotMerge.upsert(spark, store,
-        wide.repartitionByRange(10, col("id")), Seq("id"), "day")
+      LegacyStore.fragmented(spark, store,
+        wide.repartitionByRange(10, col("id")), "day")
       val st = SnapshotMerge.latestSnapshot(spark, store).get.stats("day=w")
       assert(st.files >= 8 && st.bytes > 2 * target,
         s"fixture must be fragmented across multiple bins: $st")
@@ -874,6 +875,94 @@ class SnapshotMergeSpec extends SparkSuite {
     assert(SnapshotMerge.rowCountFallbackJobs.get() === before2 + 1,
       "a pre-partv3 manifest falls back to exactly one count job")
     boundedFiles(b)
+  }
+
+  private def dataFiles(dir: java.io.File): Seq[java.io.File] =
+    dir.listFiles().toSeq.filter(f =>
+      f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+
+  /** The write task behind a data file: Spark names it
+    * `part-<task>-<job uuid>.c<n>...`. */
+  private def writeTask(f: java.io.File): String = f.getName.split('-')(1)
+
+  test("binned publish: every partition version an upsert writes is ONE file whatever the source's partitioning; its stats match the filesystem") {
+    val store = freshStore()
+    // range-split sources (10 tasks each) spanning several days: an
+    // unbinned write lands one file per task and day
+    SnapshotMerge.upsert(spark, store,
+      spark.range(0, 300).select(col("id"), concat(lit("v"), col("id")).as("v"),
+        concat(lit("d"), col("id") % 3).as("day"), col("id").as("ts"))
+        .repartitionByRange(10, col("id")),
+      Seq("id"), "day")
+    // a MERGE: updates in d0/d1, key 1 moves d1 → d2, key 1000 opens d3
+    SnapshotMerge.upsert(spark, store,
+      spark.range(0, 40).select(col("id"), lit("u").as("v"),
+        when(col("id") === 1, lit("d2")).otherwise(concat(lit("d"), col("id") % 2)).as("day"),
+        (col("id") + 1000).as("ts"))
+        .unionByName(Seq((1000L, "n", "d3", 0L)).toDF("id", "v", "day", "ts"))
+        .repartitionByRange(10, col("id")),
+      Seq("id"), "day")
+    val s1 = SnapshotMerge.snapshot(spark, store, 1L)
+    val s2 = SnapshotMerge.latestSnapshot(spark, store).get
+    assert(s2.parts.keySet === Set("day=d0", "day=d1", "day=d2", "day=d3"))
+    Seq(s1, s2).foreach { snap =>
+      snap.parts.foreach { case (name, e) =>
+        val dir = new java.io.File(store, s"$name/__e=$e")
+        val files = dataFiles(dir)
+        assert(files.length === 1,
+          s"epoch ${snap.epoch}: $name must be one file, got ${files.map(_.getName)}")
+        assert(snap.stats(name) === SnapshotMerge.PartStats(1, files.map(_.length).sum,
+          rows = Some(spark.read.parquet(dir.toString).count())),
+          s"epoch ${snap.epoch}: $name stats must match the filesystem")
+      }
+    }
+    // every partition was touched by the merge: all four are new versions
+    assert(s2.parts.forall { case (n, e) => !s1.parts.get(n).contains(e) })
+    assert(asMap(SnapshotMerge.read(spark, store)).size === 301)
+  }
+
+  test("binned publish fans a hot partition out: >= 3 targets of bytes land as >= 3 bounded files from >= 3 tasks, on an upsert bootstrap and on compact") {
+    // high-entropy payloads (~260 B/row on disk): 2 000 rows ≈ 500 KB in
+    // day=f1, about 8 targets of 64 KB; day=s1 holds one row
+    val target = 64L * 1024
+    val fat = spark.range(1, 2001)
+      .select(col("id"),
+        concat_ws("", sha2(col("id").cast("string"), 256),
+          sha2(concat(col("id").cast("string"), lit("x")), 256),
+          sha2(concat(col("id").cast("string"), lit("y")), 256),
+          sha2(concat(col("id").cast("string"), lit("z")), 256)).as("v"),
+        lit("f1").as("day"), col("id").as("ts"))
+      .unionByName(Seq((0L, "small", "s1", 0L)).toDF("id", "v", "day", "ts"))
+    val expected = fat.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    def fannedOut(store: String, bound: Long): Unit = {
+      val snap = SnapshotMerge.latestSnapshot(spark, store).get
+      assert(snap.stats("day=f1").bytes >= 3 * target,
+        s"the hot partition must be worth >= 3 targets: ${snap.stats}")
+      val files = dataFiles(new java.io.File(store, s"day=f1/__e=${snap.parts("day=f1")}"))
+      assert(files.length >= 3, s"the hot partition must fan out: ${files.map(_.getName)}")
+      assert(files.map(writeTask).distinct.length >= 3,
+        s"the fan-out must be written by >= 3 tasks: ${files.map(_.getName)}")
+      files.foreach(f => assert(f.length <= bound,
+        s"${f.getName} is ${f.length} B, over the $bound B bound"))
+      assert(dataFiles(new java.io.File(store,
+        s"day=s1/__e=${snap.parts("day=s1")}")).length === 1)
+      assert(SnapshotMerge.read(spark, store).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet === expected)
+    }
+    // an upsert bootstrap sizes its bins from the source's raw bytes
+    val boot = freshStore()
+    val saved = SnapshotMerge.publishTargetFileBytes
+    SnapshotMerge.publishTargetFileBytes = target
+    try SnapshotMerge.upsert(spark, boot, fat.coalesce(1), Seq("id"), "day")
+    finally SnapshotMerge.publishTargetFileBytes = saved
+    fannedOut(boot, (1.5 * target).toLong)
+    // compact re-bins a pre-binning fragmented layout through the same
+    // bins, its per-partition cap bounding every file
+    val legacy = freshStore()
+    LegacyStore.fragmented(spark, legacy, fat.repartitionByRange(10, col("id")), "day")
+    assert(SnapshotMerge.compact(spark, legacy,
+      maxFilesPerPartition = 4, targetFileBytes = target).isDefined)
+    fannedOut(legacy, (1.2 * target).toLong)
   }
 
   test("history: one metadata row per retained epoch — operation, partitions, and partv3 row totals; pre-partv3 epochs report null, not a guess") {

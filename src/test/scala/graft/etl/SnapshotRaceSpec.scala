@@ -23,14 +23,14 @@ class SnapshotRaceSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_snaprace").toString
     val store = s"$root/store"
     val downstream = s"$root/down"
-    // bootstrap: keys 0..99 over 4 partitions, range-split so every
-    // partition is fragmented enough for compact to have real work
-    SnapshotMerge.upsert(spark, store,
+    // bootstrap: keys 0..99 over 4 partitions, range-split and laid out
+    // as a pre-binning publish wrote them, so every partition is
+    // fragmented enough for compact to have real work
+    LegacyStore.fragmented(spark, store,
       spark.range(0, 100)
         .select(col("id"), concat(lit("v"), col("id")).as("v"),
           concat(lit("d"), col("id") % 4).as("day"), col("id").as("ts"))
-        .repartitionByRange(8, col("id")),
-      Seq("id"), "day")
+        .repartitionByRange(8, col("id")), "day")
 
     val q = graft.streaming.Streams.changeApplySink(
       spark.readStream.format(graft.streaming.SnapshotStream.Format)

@@ -428,6 +428,18 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("q97 unloads its state-store providers once it returns; a re-run answers the same") {
+    val sf = sfDir("0.001")
+    val first = StreamingOracle.streamingDedupTtl(spark, sf).collect().toSeq
+    def released = StreamingOracle.releasedProviders.get("q97")
+    assert(released.nonEmpty, "q97's stateful dedup must name the providers its run loaded")
+    released.foreach(id => assert(!org.apache.spark.sql.graft.StateBridge.isLoaded(id),
+      s"$id stays loaded after q97 returned"))
+    val again = StreamingOracle.streamingDedupTtl(spark, sf).collect().toSeq
+    assert(again === first, "a re-run after the unload must answer the same")
+    released.foreach(id => assert(!org.apache.spark.sql.graft.StateBridge.isLoaded(id)))
+  }
+
   test("l55: the streamed store-maintained dedup equals the l35 batch rollup") {
     // end-to-end through the REAL gate (ordered file source, 2 triggers,
     // store seed + per-batch probe/append): the final rollup must equal
@@ -542,6 +554,41 @@ class StreamingSpec extends SparkSuite {
         "the sink's vacuum must bound history to vacuumKeep epochs")
       // inside the retention the stream's history still time-travels
       assert(graft.etl.SnapshotMerge.read(spark, table, Some(2L)).count() === 3L)
+    } finally query.stop()
+  }
+
+  test("snapshot merge sink evaluates each trigger's micro-batch lineage once") {
+    // a pass-through in the source lineage counts every row it sees; the
+    // sink persists the deduplicated batch, so its emptiness probe, the
+    // upsert's touched-partition collect and the write read one
+    // materialization and the count equals the rows released
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sinkonce").toString
+    val table = s"$tmp/table"
+    val seen = spark.sparkContext.longAccumulator("sink_lineage_rows")
+    val pass = udf { (id: Long) => seen.add(1); id }.asNondeterministic()
+    val input = MemoryStream[(Long, Timestamp, Double)]
+    val events = input.toDF().toDF("event_id", "ts", "value")
+      .withColumn("event_id", pass(col("event_id")))
+      .withColumn("day", to_date(col("ts")).cast("string"))
+    val query = Streams.snapshotMergeSink(events, table, s"$tmp/chk",
+      keys = Seq("event_id"), tsCol = "ts", partitionCol = "day").start()
+    try {
+      val first = (1L to 50L).map(i =>
+        (i, ts(s"2024-01-0${1 + i % 3} 10:00:00"), i.toDouble))
+      input.addData(first: _*)
+      query.processAllAvailable()
+      // a second trigger updates ten keys and inserts thirty
+      val second = (41L to 80L).map(i =>
+        (i, ts(s"2024-01-0${1 + i % 3} 11:00:00"), 10.0 * i))
+      input.addData(second: _*)
+      query.processAllAvailable()
+      assert(seen.value === (first.length + second.length).toLong,
+        "each released row must pass the lineage exactly once")
+      val got = graft.etl.SnapshotMerge.read(spark, table).collect()
+        .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
+      assert(got === (1L to 40L).map(i => i -> i.toDouble).toMap ++
+        (41L to 80L).map(i => i -> 10.0 * i).toMap)
     } finally query.stop()
   }
 }

@@ -7,7 +7,11 @@ following every reference except `java.lang.ref.Reference.referent`, so
 softly, weakly, phantom and finalizer-reachable objects do not count.
 Prints the strongly reachable totals, the largest strongly reachable
 objects with the chain of fields that holds each one down to its GC
-root, and a per-class histogram.
+root, and a per-class histogram. With `--owners`, it also attributes
+the heap to the objects that own it: every reachable object is charged
+to its parent in the breadth-first tree from the roots, and the
+non-container objects and classes with the largest subtrees are listed
+with their chains.
 
 Sizes are shallow sizes as the dump records them: a 16-byte header plus
 the field bytes, 8 bytes per reference (the dump's identifier size), so
@@ -20,12 +24,21 @@ command collects first and writes only live objects), or in process with
 
 Usage:
   python3 tools/heap_owners.py DUMP.hprof [--top 15] [--classes 30]
-      [--match REGEX] [--chains 3]
+      [--match REGEX] [--chains 3] [--owners 0]
 
   --top N       the N largest strongly reachable objects, with chains
   --classes N   the N classes holding the most strongly reachable bytes
   --match RE    also count the strongly reachable instances of every
                 class whose name matches RE, with up to --chains chains
+  --owners N    the N non-container objects with the largest
+                breadth-first subtrees, with chains; a class counts as
+                the owner of what its static fields hold. Containers
+                (arrays, java.util and scala.collection classes, their
+                nodes, options, tuples and references) are never owners,
+                and an owner that is 90% or more of the nearest owner
+                above it is left to that owner, so each line names who
+                holds the bytes, not the maps and wrappers that carry
+                them.
 """
 
 import argparse
@@ -40,6 +53,11 @@ BASIC_SIZE = {4: 1, 5: 2, 6: 4, 7: 8, 8: 1, 9: 2, 10: 4, 11: 8}
 PRIM_NAME = {4: "boolean", 5: "char", 6: "float", 7: "double", 8: "byte",
              9: "short", 10: "int", 11: "long"}
 HEADER = 16  # object header bytes counted in every shallow size
+# classes that carry other objects' bytes rather than own them (--owners)
+CONTAINER = re.compile(
+    r"\[\]$|^(java\.util\.(concurrent\.)?[A-Z]|scala\.collection\.|java\.lang\.ref\.)"
+    r"|^scala\.(Some|Option|Tuple\d+)$|^java\.lang\.Object$"
+    r"|\$(Node|Entry|TreeNode)$")
 
 ROOT_KINDS = {0xFF: "unknown", 0x01: "JNI global", 0x02: "JNI local",
               0x03: "Java frame", 0x04: "native stack", 0x05: "sticky class",
@@ -325,6 +343,32 @@ def reach(heap):
     return parent, root_of, sizes, kind_of, hist
 
 
+def owners(parent, sizes, kind_of, n, share=0.9):
+    """The n largest owners: non-container instances and classes (a
+    class owns what its static fields hold) ranked by the bytes of their
+    breadth-first subtree. An owner that is `share` or more of the
+    nearest owner above it is that owner's wrapped state and is skipped.
+    Returns [(id, subtree bytes)]."""
+    order = list(parent)  # breadth-first discovery order
+    sub = {o: sizes[o] for o in order}
+    for o in reversed(order):  # children before their parents
+        p = parent[o]
+        if p != o:
+            sub[p] += sub[o]
+    def is_owner(o):
+        name = kind_of.get(o)
+        return name is not None and not CONTAINER.search(name.removeprefix("class "))
+    above = {}  # subtree bytes of the nearest owner strictly above
+    for o in order:  # parents before their children
+        p = parent[o]
+        if p != o:
+            above[o] = sub[p] if is_owner(p) else above.get(p)
+    cands = [o for o in order if is_owner(o)
+             and (above.get(o) is None or sub[o] < share * above[o])]
+    cands.sort(key=lambda o: -sub[o])
+    return [(o, sub[o]) for o in cands[:n]]
+
+
 def chain(heap, parent, root_of, oid, limit=40):
     """Lines from the object up to its GC root: each holder and its field."""
     lines, cur = [], oid
@@ -359,6 +403,7 @@ def main(argv=None):
     ap.add_argument("--classes", type=int, default=30)
     ap.add_argument("--match")
     ap.add_argument("--chains", type=int, default=3)
+    ap.add_argument("--owners", type=int, default=0)
     a = ap.parse_args(argv)
 
     heap = Heap(a.dump)
@@ -376,6 +421,13 @@ def main(argv=None):
         print(f"{mb(sizes[oid])}  {label(heap, oid, kind_of[oid])}")
         for line in chain(heap, parent, root_of, oid):
             print(f"              {line}")
+
+    if a.owners:
+        print(f"\nlargest owners by breadth-first subtree (top {a.owners}):")
+        for oid, sub in owners(parent, sizes, kind_of, a.owners):
+            print(f"{mb(sub)}  {label(heap, oid, kind_of[oid])}")
+            for line in chain(heap, parent, root_of, oid):
+                print(f"              {line}")
 
     print(f"\nstrongly reachable bytes by class (top {a.classes}):")
     print(f"{'bytes':>11}  {'count':>9}  class")
