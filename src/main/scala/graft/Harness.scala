@@ -23,6 +23,10 @@ object Harness {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
+      // The SQL status store keeps each retained execution's plan
+      // metrics on the heap whether or not a UI reads them; the default
+      // retains 1,000 executions. Nothing here reads them back.
+      .config("spark.sql.ui.retainedExecutions", "20")
       .config("spark.sql.warehouse.dir", warehouse)
       // The generated-class cache is a STATIC conf defaulting to 100
       // entries; a 188-query registry emits thousands of codegen units

@@ -4,8 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-aggregation multiset diff of two same-schema frames — the shared
-  * engine behind every CDF surface ([[SnapshotMerge.changes]],
-  * [[SnapshotMerge.changesKeyed]], the streaming-source batches).
+  * engine behind every CDF surface. A MERGE commit runs it once to record
+  * its change set (the source against the rows it replaces, [[netted]]);
+  * the feeds ([[SnapshotMerge.changes]], [[SnapshotMerge.changesKeyed]],
+  * the streaming-source batches) scan that set on an adjacent hop and run
+  * [[tagged]] over two manifests' changed partitions on every other range.
   *
   * Contract: [[tagged]]`(after, before)` is multiset-identical to
   *
@@ -40,10 +43,16 @@ private[etl] object NetDiff {
     * `sequence` array: a keyed store's diff has multiplicity 1 per row
     * value (full-row duplicates only), so the array is bounded by the
     * duplicate count of ONE row value, never a partition. */
-  def tagged(after: DataFrame, before: DataFrame): DataFrame = {
-    val cols = after.columns.toSeq
-    val net = after.withColumn("_w", lit(1L))
-      .unionByName(before.withColumn("_w", lit(-1L)))
+  def tagged(after: DataFrame, before: DataFrame): DataFrame =
+    netted(after.withColumn("_w", lit(1L)).unionByName(before.withColumn("_w", lit(-1L))))
+
+  /** [[tagged]] over rows already signed in a last column `_w`: +1 for an
+    * `after` row, −1 for a `before` row. The aggregation keeps its input's
+    * partitioning where that clusters every column, so a single-partition
+    * input is diffed with no shuffle. */
+  def netted(signed: DataFrame): DataFrame = {
+    val cols = signed.columns.toSeq.filterNot(_ == "_w")
+    val net = signed
       .groupBy(cols.map(col): _*)
       .agg(sum(col("_w")).as("_net"))
       .filter(col("_net") =!= 0L)

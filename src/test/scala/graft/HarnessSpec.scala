@@ -10,6 +10,7 @@ class HarnessSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ===
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "10000")
+    assert(spark.conf.get("spark.sql.ui.retainedExecutions") === "20")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     val hadoop = spark.sparkContext.hadoopConfiguration

@@ -1161,9 +1161,14 @@ class SnapshotMergeSpec extends SparkSuite {
     // state that lets a stale tip pointer pass the two-probe trust
     val old = System.currentTimeMillis() - 24 * 3600 * 1000L
     val d1 = new java.io.File(store, "day=d1")
+    // every version dir: d1's partition versions and the change sets
+    def versions = d1.listFiles() ++ new java.io.File(store, "_changes").listFiles()
     d1.listFiles().foreach { ed =>
       val aged = ed.getName != "__e=2"
       if (aged) { ed.listFiles().foreach(_.setLastModified(old)); ed.setLastModified(old) }
+    }
+    new java.io.File(store, "_changes").listFiles().foreach { ed =>
+      ed.listFiles().foreach(_.setLastModified(old)); ed.setLastModified(old)
     }
     new java.io.File(store).listFiles()
       .filter(_.getName.startsWith("_GRAFT_SNAP_"))
@@ -1176,7 +1181,7 @@ class SnapshotMergeSpec extends SparkSuite {
         "two-probe trust")
     assert(SnapshotMerge.tipEpoch(spark, store) === Some(4L))
     // a later pass with the survivor aged finishes the sweep cleanly
-    d1.listFiles().foreach { ed =>
+    versions.foreach { ed =>
       ed.listFiles().foreach(_.setLastModified(old)); ed.setLastModified(old)
     }
     SnapshotMerge.vacuum(spark, store, keep = 1,
@@ -1289,6 +1294,197 @@ class SnapshotMergeSpec extends SparkSuite {
     val hits1 = SnapshotMerge.tipPointerHits.get()
     assert(SnapshotMerge.tipEpoch(spark, store) === Some(7L))
     assert(SnapshotMerge.tipPointerHits.get() === hits1 + 1)
+  }
+
+  /** Count plus an order-independent hash of every row. */
+  private def fingerprint(df: DataFrame): (Long, Long) = {
+    val hs = df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*)).collect().map(_.getLong(0))
+    (hs.length.toLong, hs.sum)
+  }
+
+  /** The change rows into epoch `e` both ways: the recorded set through
+    * `changes`, and the manifest diff through the same hop with the
+    * manifest's change set ignored. */
+  private def bothPaths(store: String, e: Long): ((Long, Long), (Long, Long)) = {
+    val to = SnapshotMerge.snapshot(spark, store, e)
+    assert(to.changes.isDefined, s"epoch $e must record its change set")
+    val viaDiff = SnapshotMerge.streamingChangesAdjacent(spark, store,
+      SnapshotMerge.snapshot(spark, store, e - 1), to.copy(changes = None), withDeletes = true)
+    (fingerprint(SnapshotMerge.changes(spark, store, e - 1, e)), fingerprint(viaDiff))
+  }
+
+  private def hasExchange(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("Exchange")
+
+  test("recorded change set ≡ manifest diff: replays, moved keys, keys on both sides, duplicates, widening, NaN/±0.0, null partition and key") {
+    def row(id: Long, v: String, day: String, ts: Long) = (id, v, day, ts)
+    def upsertRows(store: String, rows: (Long, String, String, Long)*): Long =
+      SnapshotMerge.upsert(spark, store, rows.toDF("id", "v", "day", "ts"), Seq("id"), "day")
+    // (scenario, store, epoch, expected change rows)
+    val cases = Seq.newBuilder[(String, String, Long, Long)]
+    def scenarios(): Unit = {
+      locally { // a replay of identical rows commits an epoch whose changes cancel
+        val store = freshStore(); bootstrap(store)
+        val e = upsertRows(store, row(1L, "a", "d1", 10L), row(2L, "b", "d1", 10L), row(3L, "c", "d2", 10L))
+        cases += (("replay", store, e, 0L))
+      }
+      locally { // key 3 moves d2 -> d1, key 2 updates in place
+        val store = freshStore(); bootstrap(store)
+        val e = upsertRows(store, row(3L, "c", "d1", 10L), row(2L, "b2", "d1", 20L))
+        cases += (("moved key", store, e, 4L))
+      }
+      locally { // key 2 on both sides re-lands from the inserts; 3 goes; 4 arrives
+        val store = freshStore(); bootstrap(store)
+        val e = SnapshotMerge.applyChanges(spark, store,
+          Seq(row(2L, "b2", "d1", 20L), row(4L, "d", "d3", 1L)).toDF("id", "v", "day", "ts"),
+          Seq(2L, 3L).toDF("id"), Seq("id"), "day")
+        cases += (("applyChanges both sides", store, e, 4L))
+      }
+      locally { // a duplicate-key source lands both rows
+        val store = freshStore(); bootstrap(store)
+        val e = upsertRows(store, row(1L, "a1", "d1", 1L), row(1L, "a2", "d1", 2L))
+        cases += (("duplicate keys", store, e, 3L))
+      }
+      locally { // widening: an empty batch commits the schema alone, then a row lands
+        val store = freshStore(); bootstrap(store)
+        val e1 = SnapshotMerge.upsert(spark, store,
+          Seq.empty[(Long, String, String, Long, String)].toDF("id", "v", "day", "ts", "extra"),
+          Seq("id"), "day")
+        val e2 = SnapshotMerge.upsert(spark, store,
+          Seq((2L, "b2", "d1", 20L, "x")).toDF("id", "v", "day", "ts", "extra"), Seq("id"), "day")
+        cases += (("widening, empty batch", store, e1, 0L))
+        cases += (("widening, rows", store, e2, 2L))
+      }
+      locally { // -0.0 replaces 0.0 and NaN replaces NaN: both cancel; null partition moves values
+        val store = freshStore()
+        val nul = null.asInstanceOf[String]
+        SnapshotMerge.upsert(spark, store,
+          Seq((1L, 0.0, "d1"), (2L, Double.NaN, "d1"), (3L, 1.0, nul)).toDF("id", "x", "day"),
+          Seq("id"), "day")
+        val e = SnapshotMerge.upsert(spark, store,
+          Seq((1L, -0.0, "d1"), (2L, Double.NaN, "d1"), (3L, 2.0, nul), (4L, -0.0, nul))
+            .toDF("id", "x", "day"), Seq("id"), "day")
+        cases += (("NaN/±0.0/null partition", store, e, 3L))
+      }
+      locally { // a null key matches nothing: the store keeps its null-key row
+        val store = freshStore()
+        SnapshotMerge.upsert(spark, store,
+          Seq((Option(1L), "a", "d1"), (Option.empty[Long], "n", "d1")).toDF("id", "v", "day"),
+          Seq("id"), "day")
+        val e = SnapshotMerge.upsert(spark, store,
+          Seq((Option.empty[Long], "n2", "d1")).toDF("id", "v", "day"), Seq("id"), "day")
+        cases += (("null key", store, e, 1L))
+      }
+    }
+    // once one task records each set, once the shuffled construction
+    // does (a 512 B target is below every store's bytes)
+    scenarios()
+    val saved = SnapshotMerge.publishTargetFileBytes
+    SnapshotMerge.publishTargetFileBytes = 512L
+    try scenarios() finally SnapshotMerge.publishTargetFileBytes = saved
+    cases.result().foreach { case (name, store, e, expected) =>
+      val (recorded, viaDiff) = bothPaths(store, e)
+      assert(recorded === viaDiff, s"$name: the recorded set must equal the diff")
+      assert(recorded._1 === expected, s"$name: change rows")
+    }
+  }
+
+  test("change sets: a bootstrap records none; a manifest without the line diffs; the recorded read is a plain scan") {
+    val store = freshStore()
+    bootstrap(store)
+    assert(SnapshotMerge.snapshot(spark, store, 1L).changes.isEmpty,
+      "a bootstrap has no base to record changes against")
+    assert(!new java.io.File(store, "_changes").exists())
+    SnapshotMerge.upsert(spark, store,
+      Seq((2L, "b2", "d1", 20L), (4L, "d", "d3", 20L)).toDF("id", "v", "day", "ts"),
+      Seq("id"), "day")
+    val recorded = SnapshotMerge.changes(spark, store, 1L, 2L)
+    assert(!hasExchange(recorded),
+      s"an adjacent recorded hop must be a plain scan:\n${recorded.queryExecution.executedPlan}")
+    val want = fingerprint(recorded)
+    assert(want._1 === 3L)
+    // a manifest written before change sets were recorded: no line
+    val m = java.nio.file.Path.of(store, "_GRAFT_SNAP_2")
+    val lines = new String(java.nio.file.Files.readAllBytes(m), "UTF-8").split('\n')
+    assert(lines.exists(_.startsWith("changes\t")))
+    java.nio.file.Files.write(m,
+      lines.filterNot(_.startsWith("changes\t")).mkString("", "\n", "\n").getBytes("UTF-8"))
+    new java.io.File(store, "._GRAFT_SNAP_2.crc").delete() // the rewrite voids its checksum
+    assert(SnapshotMerge.snapshot(spark, store, 2L).changes.isEmpty)
+    val diffed = SnapshotMerge.changes(spark, store, 1L, 2L)
+    assert(hasExchange(diffed), "no recorded set: the feed must diff the partitions")
+    assert(fingerprint(diffed) === want)
+    // a predicate rewrite and a restore record none either
+    SnapshotMerge.deleteWhere(spark, store, col("id") === 4L)
+    SnapshotMerge.restoreTo(spark, store, 1L)
+    assert(SnapshotMerge.snapshot(spark, store, 3L).changes.isEmpty)
+    assert(SnapshotMerge.snapshot(spark, store, 4L).changes.isEmpty)
+  }
+
+  test("change sets: an aborted publish leaves no referenced _changes dir behind") {
+    val store = freshStore()
+    bootstrap(store)
+    SnapshotMerge.publishPreCommitHook = () => throw new java.io.IOException("injected abort")
+    try intercept[java.io.IOException] {
+      SnapshotMerge.upsert(spark, store,
+        Seq((2L, "b2", "d1", 20L)).toDF("id", "v", "day", "ts"), Seq("id"), "day")
+    } finally SnapshotMerge.publishPreCommitHook = () => ()
+    assert(SnapshotMerge.committedEpochs(spark, store) === Seq(1L))
+    val sets = Option(new java.io.File(store, "_changes").listFiles()).toSeq.flatten
+    assert(sets.isEmpty, s"the aborted publish's change set must be retracted: $sets")
+    val parent = new java.io.File(store).getParentFile
+    assert(!parent.listFiles().exists(_.getName.contains("__staging")))
+    // the retry records its set, and the manifest names it
+    SnapshotMerge.upsert(spark, store,
+      Seq((2L, "b2", "d1", 20L)).toDF("id", "v", "day", "ts"), Seq("id"), "day")
+    val v = SnapshotMerge.snapshot(spark, store, 2L).changes
+    assert(v.exists(p => new java.io.File(store, s"_changes/__e=$p").isDirectory), s"$v")
+  }
+
+  test("vacuum: dropped epochs' change sets go with them; the full walk reaps orphan sets") {
+    val store = freshStore()
+    bootstrap(store)
+    (2 to 3).foreach { i =>
+      SnapshotMerge.upsert(spark, store,
+        Seq((2L, s"b$i", "d1", i.toLong)).toDF("id", "v", "day", "ts"), Seq("id"), "day")
+    }
+    val v2 = SnapshotMerge.snapshot(spark, store, 2L).changes.get
+    val v3 = SnapshotMerge.snapshot(spark, store, 3L).changes.get
+    val orphan = new java.io.File(store, "_changes/__e=99")
+    assert(orphan.mkdirs())
+    SnapshotMerge.vacuum(spark, store, keep = 1, graceMs = -1000L, sweepOrphans = false)
+    assert(SnapshotMerge.committedEpochs(spark, store) === Seq(3L))
+    assert(!new java.io.File(store, s"_changes/__e=$v2").exists(),
+      "a dropped epoch's change set is swept from the manifests alone")
+    assert(new java.io.File(store, s"_changes/__e=$v3").isDirectory, "the kept epoch's set stays")
+    assert(orphan.exists(), "the manifest-driven mode cannot see orphans")
+    SnapshotMerge.vacuum(spark, store, keep = 1, graceMs = -1000L)
+    assert(!orphan.exists(), "the full walk reaps an orphan set")
+    assert(new java.io.File(store, s"_changes/__e=$v3").isDirectory)
+    assert(asMap(SnapshotMerge.read(spark, store))(2L) === ("b3", "d1", 3L))
+  }
+
+  test("change sets: changesKeyed and the streaming hop agree on both paths") {
+    val store = freshStore()
+    bootstrap(store)
+    SnapshotMerge.upsert(spark, store,
+      Seq((2L, "b2", "d1", 20L), (3L, "c2", "d1", 30L), (4L, "d", "d3", 20L))
+        .toDF("id", "v", "day", "ts"), Seq("id"), "day")
+    val (s1, s2) = (SnapshotMerge.snapshot(spark, store, 1L), SnapshotMerge.snapshot(spark, store, 2L))
+    val keys = Some(Seq("id"))
+    val keyed = fingerprint(SnapshotMerge.changesKeyed(spark, store, 1L, 2L, Seq("id")))
+    assert(keyed._1 === 5L)
+    assert(fingerprint(SnapshotMerge.streamingChangesAdjacent(
+      spark, store, s1, s2, withDeletes = true, keys)) === keyed)
+    assert(fingerprint(SnapshotMerge.streamingChangesAdjacent(
+      spark, store, s1, s2.copy(changes = None), withDeletes = true, keys)) === keyed)
+    assert(fingerprint(SnapshotMerge.streamingChanges(
+      spark, store, 1L, 2L, withDeletes = true, keys)) === keyed)
+    // inserts only: the recorded and diffed hops drop the same deletes
+    assert(fingerprint(SnapshotMerge.streamingChangesAdjacent(
+      spark, store, s1, s2, withDeletes = false)) ===
+      fingerprint(SnapshotMerge.streamingChangesAdjacent(
+        spark, store, s1, s2.copy(changes = None), withDeletes = false)))
   }
 
   test("q110 registered query runs and is stable across invocations") {
